@@ -964,6 +964,7 @@ def test_size_bytes_suffixes_and_unparseable():
     assert _size_bytes("-1") == -1
     assert _size_bytes("not-a-size") == 0
     assert _size_bytes("") == 0
+    assert _size_bytes("1e400g") == 0  # float overflow, not a crash
 
 
 def test_reliable_loop_checkpoints_flag(spark, tmp_path):

@@ -183,31 +183,6 @@ def test_field_mapping_renames(spark, sf_dir):
     assert len(rows) > 0
 
 
-def test_cache_entities_same_result(spark, sf_dir):
-    from tfx_addons_feast_examplegen_spark.operators.pit_join import (
-        materialize_features,
-    )
-    from tfx_addons_feast_examplegen_spark.registry import testdata_registry
-    from tfx_addons_feast_examplegen_spark.session import register_tables
-
-    register_tables(spark, sf_dir)
-    spine = """
-        SELECT c_custkey AS user_id,
-               TIMESTAMP '2024-01-20 00:00:00' AS event_timestamp
-        FROM customer WHERE c_custkey < 100
-    """
-    kw = dict(
-        entity_query=spine,
-        features=["user_events:value", "user_events:event_type"],
-        registry=testdata_registry(),
-        sf_dir=sf_dir,
-    )
-    plain = materialize_features(spark, **kw).collect()
-    cached = materialize_features(spark, cache_entities=True, **kw).collect()
-    key = lambda r: (r.user_id, r.event_timestamp)  # noqa: E731
-    assert sorted(plain, key=key) == sorted(cached, key=key)
-
-
 def test_time_bucketed_equivalence(spark, sf_dir):
     # The bucketed interval join must produce byte-identical results to
     # the naive range join (SURVEY.md §4.2 scale technique).

@@ -2,6 +2,7 @@
 
 import datetime as dt
 import glob
+import gzip
 import math
 import os
 
@@ -14,9 +15,9 @@ from tfx_addons_feast_examplegen_spark.functions.tfexample import (
     encode_sequence_example,
 )
 from tfx_addons_feast_examplegen_spark.sources.tfrecord import (
+    _write_record,
     crc32c,
     read_tfrecords,
-    write_tfrecords,
 )
 
 
@@ -86,13 +87,21 @@ def test_crc32c_known_vectors():
 def test_tfrecord_file_roundtrip(tmp_path):
     recs = [b"alpha", b"", b"x" * 1000]
     p = str(tmp_path / "f.tfrecord.gz")
-    assert write_tfrecords(recs, p) == 3
+    with gzip.open(p, "wb") as fh:
+        for r in recs:
+            _write_record(fh, r)
     assert list(read_tfrecords(p)) == recs
+    raw = str(tmp_path / "f.tfrecord")
+    with open(raw, "wb") as fh:
+        for r in recs:
+            _write_record(fh, r)
+    assert list(read_tfrecords(raw, compressed=False)) == recs
 
 
 def test_tfrecord_detects_corruption(tmp_path):
     p = str(tmp_path / "f.tfrecord")
-    write_tfrecords([b"payload"], p, compress=False)
+    with open(p, "wb") as f:
+        _write_record(f, b"payload")
     data = bytearray(open(p, "rb").read())
     data[14] ^= 0xFF  # flip a payload byte
     open(p, "wb").write(bytes(data))
@@ -151,9 +160,11 @@ def test_partitioned_tfrecords_rerun_overwrites(spark, tmp_path):
     )
 
     out_dir = str(tmp_path / "recs")
+    # framing edge cases ride along: an empty record and a 1000-byte one
+    want = [b"%03d" % i for i in range(300)] + [b"", b"x" * 1000]
     df = spark.createDataFrame(
-        [Row(example=b"%03d" % i, split="train" if i % 3 else "eval")
-         for i in range(300)],
+        [Row(example=r, split="train" if i % 3 else "eval")
+         for i, r in enumerate(want)],
         "example binary, split string",
     ).repartition(4)
     for _ in range(2):  # second run must replace, not append
@@ -161,7 +172,39 @@ def test_partitioned_tfrecords_rerun_overwrites(spark, tmp_path):
     recs = []
     for f in glob.glob(os.path.join(out_dir, "Split-*", "*.tfrecord.gz")):
         recs.extend(read_tfrecords(f))
-    assert sorted(recs) == sorted(b"%03d" % i for i in range(300))
+    assert sorted(recs) == sorted(want)
+
+
+def test_partitioned_tfrecords_is_one_job(spark, tmp_path):
+    # One pass over the data: the writer's foreachPartition is the only
+    # Spark job it launches (no driver-side probe re-running the plan).
+    from pyspark.sql import functions as F
+
+    from tfx_addons_feast_examplegen_spark.sources.tfrecord import (
+        write_partitioned_tfrecords,
+    )
+
+    sc = spark.sparkContext
+    df = spark.range(0, 500, 1, 4).select(
+        F.col("id").cast("string").cast("binary").alias("example"),
+        F.when(F.col("id") % 3 == 0, "eval").otherwise("train").alias("split"),
+    )
+    out_dir = str(tmp_path / "one_job")
+    group = "tfrecord-one-job-test"
+    sc.setJobGroup(group, "write_partitioned_tfrecords job count")
+    try:
+        write_partitioned_tfrecords(df, out_dir, split_col="split")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    recs = [
+        r
+        for f in glob.glob(os.path.join(out_dir, "Split-*", "*.tfrecord.gz"))
+        for r in read_tfrecords(f)
+    ]
+    assert sorted(recs) == sorted(str(i).encode() for i in range(500))
+    assert sorted(os.listdir(out_dir)) == ["Split-eval", "Split-train"]
 
 
 def test_partitioned_tfrecords_streams_large_partition(spark, tmp_path):
@@ -180,10 +223,10 @@ def test_partitioned_tfrecords_streams_large_partition(spark, tmp_path):
         [Row(example=(b"%06d" % i) * 20) for i in range(n)],
         "example binary",
     ).coalesce(1)
-    write_partitioned_tfrecords(df, out_dir, compress=False)
-    files = glob.glob(os.path.join(out_dir, "part-*.tfrecord"))
+    write_partitioned_tfrecords(df, out_dir)
+    files = glob.glob(os.path.join(out_dir, "part-*.tfrecord.gz"))
     assert len(files) == 1
-    got = list(read_tfrecords(files[0], compressed=False))
+    got = list(read_tfrecords(files[0]))
     assert len(got) == n and got[0] == b"000000" * 20
 
 
@@ -197,6 +240,17 @@ def test_param_substitution_quotes_strings():
         {"name": "o'brien", "lo": 5},
     )
     assert q == "SELECT * FROM t WHERE a = 'o''brien' AND b >= 5"
+    # None is SQL NULL, not the text None
+    assert substitute_params("x IS @v", {"v": None}) == "x IS NULL"
+    # microseconds survive; whole seconds render as before
+    assert (
+        substitute_params("@t", {"t": dt.datetime(2024, 1, 15, 1, 2, 3, 4500)})
+        == "TIMESTAMP '2024-01-15 01:02:03.004500'"
+    )
+    assert (
+        substitute_params("@t", {"t": dt.datetime(2024, 1, 15, 1, 2, 3)})
+        == "TIMESTAMP '2024-01-15 01:02:03'"
+    )
 
 
 def test_unknown_format_rejected(spark, sf_dir):
@@ -499,14 +553,15 @@ def test_read_tfrecord_dataset_roundtrip_and_nulls(spark, tmp_path):
     )
     from tfx_addons_feast_examplegen_spark.sources.tfrecord import (
         read_tfrecord_dataset,
-        write_tfrecords,
     )
 
     recs = [
         encode_example({"k": 1, "name": "a", "extra": 10, "ids": [7, 8]}),
         encode_example({"k": 2, "name": "b", "ids": [9]}),  # no 'extra'
     ]
-    write_tfrecords(recs, str(tmp_path / "part-0.tfrecord"), compress=False)
+    with open(tmp_path / "part-0.tfrecord", "wb") as fh:
+        for r in recs:
+            _write_record(fh, r)
     df = read_tfrecord_dataset(
         spark,
         str(tmp_path),
@@ -537,14 +592,15 @@ def test_read_tfrecord_dataset_chunked_matches_whole(spark, tmp_path):
     from tfx_addons_feast_examplegen_spark.sources.tfrecord import (
         _scan_chunks,
         read_tfrecord_dataset,
-        write_tfrecords,
     )
 
     recs = [
         encode_example({"k": i, "payload": "x" * (i % 37)}) for i in range(500)
     ]
     f = str(tmp_path / "part-0.tfrecord")
-    write_tfrecords(recs, f, compress=False)
+    with open(f, "wb") as fh:
+        for r in recs:
+            _write_record(fh, r)
 
     chunks = _scan_chunks(f, f, 1 << 10)  # ~1 KB chunks
     assert len(chunks) > 5  # genuinely split
@@ -571,11 +627,12 @@ def test_read_tfrecord_gzip_size_guard(spark, tmp_path):
     )
     from tfx_addons_feast_examplegen_spark.sources.tfrecord import (
         read_tfrecord_dataset,
-        write_tfrecords,
     )
 
     recs = [encode_example({"k": i, "t": "y" * 100}) for i in range(200)]
-    write_tfrecords(recs, str(tmp_path / "part-0.tfrecord.gz"), compress=True)
+    with gzip.open(tmp_path / "part-0.tfrecord.gz", "wb") as fh:
+        for r in recs:
+            _write_record(fh, r)
     schema = StructType.fromDDL("k long, t string")
 
     with pytest.raises(ValueError, match="max_compressed_file_bytes"):
@@ -585,49 +642,6 @@ def test_read_tfrecord_gzip_size_guard(spark, tmp_path):
 
     ok = read_tfrecord_dataset(spark, str(tmp_path), schema)
     assert ok.count() == 200
-
-
-def test_tfrecord_index_sidecar_roundtrip(spark, tmp_path):
-    # An indexed shard must split from the sidecar (no header hop), read
-    # back identically, and a STALE sidecar must be distrusted.
-    import os
-
-    from pyspark.sql.types import StructType
-
-    from tfx_addons_feast_examplegen_spark.functions.tfexample import (
-        encode_example,
-    )
-    from tfx_addons_feast_examplegen_spark.sources.tfrecord import (
-        _read_index_chunks,
-        read_tfrecord_dataset,
-        write_tfrecords,
-    )
-
-    recs = [encode_example({"k": i}) for i in range(1000)]
-    f = str(tmp_path / "part-0.tfrecord")
-    write_tfrecords(recs, f, compress=False, write_index=True, index_every=64)
-    assert os.path.exists(f + ".idx")
-
-    chunks = _read_index_chunks(f, 1 << 10)
-    assert chunks and len(chunks) > 3
-    assert sum(nb for _, nb in chunks) == os.path.getsize(f)
-
-    schema = StructType.fromDDL("k long")
-    df = read_tfrecord_dataset(
-        spark, str(tmp_path), schema, target_chunk_bytes=1 << 10
-    )
-    assert sorted(r.k for r in df.collect()) == list(range(1000))
-
-    # stale sidecar (file grew after indexing) -> ignored, not trusted
-    with open(f, "ab") as fh:
-        fh.write(b"")  # size unchanged; now fake a bad index instead
-    with open(f + ".idx", "w") as fh:
-        fh.write("0\n17\n")  # wrong final size
-    assert _read_index_chunks(f, 1 << 10) is None
-    df2 = read_tfrecord_dataset(
-        spark, str(tmp_path), schema, target_chunk_bytes=1 << 10
-    )
-    assert df2.count() == 1000  # header-hop fallback still reads fine
 
 
 def test_read_tfrecord_dataset_splits_one_shard_across_tasks(spark, tmp_path):
@@ -642,7 +656,6 @@ def test_read_tfrecord_dataset_splits_one_shard_across_tasks(spark, tmp_path):
         encode_example,
     )
     from tfx_addons_feast_examplegen_spark.sources.tfrecord import (
-        _write_record,
         read_tfrecord_dataset,
     )
 
@@ -768,16 +781,5 @@ def test_encode_examples_floors_task_count(spark, tmp_path):
     target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     out = encode_examples(df)
+    assert out.columns == ["example"]
     assert out.rdd.getNumPartitions() >= min(target, 1000)
-    # min_tasks=0 pins the input partitioning (ordering-preserving path)
-    pinned = encode_examples(df, min_tasks=0)
-    assert pinned.rdd.getNumPartitions() == 1
-    # explicit floor applies even to non-file-backed frames
-    mem = spark.range(0, 1000, 1, 1).withColumnRenamed("id", "k")
-    assert encode_examples(mem, min_tasks=8).rdd.getNumPartitions() == 8
-    # already-wide inputs are untouched (no shuffle at production scale)
-    wide = spark.range(0, 1000, 1, target + 7).withColumnRenamed("id", "k")
-    assert (
-        encode_examples(wide, min_tasks=target).rdd.getNumPartitions()
-        == target + 7
-    )

@@ -55,7 +55,7 @@ def _size_bytes(v: str) -> int:
         if s and s[-1] in _SIZE_SUFFIX:
             return int(float(s[:-1]) * _SIZE_SUFFIX[s[-1]])
         return int(s)
-    except ValueError:
+    except (ValueError, OverflowError):  # '1e400g': float inf -> int
         return 0
 
 
@@ -633,8 +633,10 @@ def hits(
     _PIN_EVERY = 6
     for i in range(iterations):
         last = i == iterations - 1
+        # auth half-steps are odd (2i+1), never a multiple of the even
+        # cadence: only the end pin (or per_iteration) applies here.
         auths = _push(hubs, hub_col, e_s, "__s", "__d", auth_col,
-                      pin=every or last or (2 * i + 1) % _PIN_EVERY == 0)
+                      pin=every or last)
         if normalize == "per_iteration":
             auths = _rescale(auths, auth_col)
         hubs = _push(auths, auth_col, e_d, "__d", "__s", hub_col,

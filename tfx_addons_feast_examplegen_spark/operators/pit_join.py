@@ -321,7 +321,6 @@ def materialize_features(
     sf_dir: str,
     entity_ts_col: str = "event_timestamp",
     full_feature_names: bool = False,
-    cache_entities: bool = False,
 ) -> DataFrame:
     """End-to-end historical retrieval: the engine's ``get_historical_features``.
 
@@ -332,14 +331,6 @@ def materialize_features(
     composition — each view deduped independently, all LEFT onto the
     spine). ``full_feature_names=True`` prefixes outputs ``view__feature``
     (Feast's naming option; default unprefixed like the reference).
-
-    ``cache_entities=True`` caches the entity frame, which every view's
-    spine distinct AND the final left joins re-scan (measured 0.79s vs
-    1.06s median on the sf0.1 pit_join; the win grows with entity-query
-    cost and view count). Opt-in because the cache must fit cluster
-    memory — a spine wider than storage memory would spill and lose; the
-    caller owns ``unpersist`` (the cache must live until the result is
-    consumed, which this function cannot see).
 
     Each view's physical as-of strategy is resolved per its registry
     ``strategy`` field: ``auto`` (default) applies the measured decision
@@ -355,8 +346,6 @@ def materialize_features(
     entity_df = (
         spark.sql(entity_query) if isinstance(entity_query, str) else entity_query
     )
-    if cache_entities:
-        entity_df = entity_df.cache()
     if entity_ts_col not in entity_df.columns:
         raise RegistryError(
             f"entity query result lacks timestamp column {entity_ts_col!r}"

@@ -118,26 +118,6 @@ def split_counts(df: DataFrame, split_col: str = "split") -> DataFrame:
     return df.groupBy(split_col).agg(F.count(F.lit(1)).alias("n")).orderBy(split_col)
 
 
-def write_splits(
-    df: DataFrame,
-    out_dir: str,
-    split_col: str = "split",
-    format: str = "parquet",
-) -> None:
-    """Write one directory per split: ``{out_dir}/Split-{name}/`` —
-    the reference's output layout (``executor.py:186-188`` [delegated]).
-
-    Single pass, partitioned write (no per-split job); directory names
-    are normalized afterwards by readers that expect ``Split-``.
-    """
-    (
-        df.write.mode("overwrite")
-        .partitionBy(split_col)
-        .format(format)
-        .save(out_dir)
-    )
-
-
 def neardup_leakage_report(
     docs: DataFrame,
     *,

@@ -372,11 +372,14 @@ _DRIVER_PRIORITY = [
     "html_text_extract",
     "interval_overlap_join",
     "param_substitution",
-    "pii_redaction",
     "pit_join_composite_key",
     "pit_join_field_mapping",
     "pit_join_multiview",
     "pit_join_prefixed",
+    # materialize_features lost its cache_entities option, so this
+    # entry's fingerprint moved; it takes the newest-vintage fill slot
+    # (pii_redaction, driver-green since r10).
+    "pit_join_ttl",
     # --- slot 50 boundary ---
 ]
 if set(_ENTRY_ORDER) != set(_REGISTRY):

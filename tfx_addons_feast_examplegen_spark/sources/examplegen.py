@@ -49,7 +49,8 @@ def substitute_params(query: str, params: dict[str, Any] | None) -> str:
     The reference's TFX driver substitutes ``@begin_timestamp`` /
     ``@end_timestamp`` tokens into the entity query per ``range_config``
     (``usage_prototype.py:46-48``). Same contract: ``@name`` tokens are
-    replaced with SQL literals (strings quoted, others verbatim).
+    replaced with SQL literals (strings quoted, ``None`` as ``NULL``,
+    datetimes to the microsecond, others verbatim).
     """
     if not params:
         return query
@@ -58,8 +59,13 @@ def substitute_params(query: str, params: dict[str, Any] | None) -> str:
     out = query
     for name, value in sorted(params.items(), key=lambda kv: -len(kv[0])):
         token = f"@{name}"
-        if isinstance(value, dt.datetime):
-            lit = f"TIMESTAMP '{value.strftime('%Y-%m-%d %H:%M:%S')}'"
+        if value is None:
+            lit = "NULL"
+        elif isinstance(value, dt.datetime):
+            # isoformat omits a zero microsecond part; an aware value
+            # renders its wall clock, without the zone
+            ts = value.replace(tzinfo=None).isoformat(sep=" ")
+            lit = f"TIMESTAMP '{ts}'"
         elif isinstance(value, dt.date):
             lit = f"DATE '{value.isoformat()}'"
         elif isinstance(value, str):
@@ -89,39 +95,26 @@ def route_split_patterns(
     return out
 
 
-def encode_examples(
-    df: DataFrame, bytes_col: str = "example", *, min_tasks: int | None = None
-) -> DataFrame:
-    """DataFrame -> single binary column of serialized tf.Example bytes.
-
-    .. note:: Since the encode-parallelism floor landed, the DEFAULT
-       (``min_tasks=None``) may repartition a narrow input, which
-       changes output ROW ORDER versus earlier releases. Callers that
-       relied on input order must pass ``min_tasks=0`` to pin the input
-       partitioning; the in-repo split/TFRecord paths are order-
-       independent (splits hash the serialized bytes).
+def encode_examples(df: DataFrame) -> DataFrame:
+    """DataFrame -> one binary column ``example`` of serialized tf.Example
+    bytes.
 
     Arrow-batched ``mapInPandas``; per-batch Python loop only at this
     terminal stage (parity with the reference's beam.Map encode).
 
-    The encode stage's task count is floored so a narrow input (e.g.
-    one small parquet file scanning as a single split) is round-robin
-    repartitioned BEFORE the per-row proto encode — the Python-side
-    CPU work that dominates this stage spreads across the cluster
-    instead of serializing onto one core. By default this delegates to
-    ``rebalance_for_compute`` (file-size split estimate, no plan->RDD
-    probe — cheap enough for the per-micro-batch streaming path; at
-    production scale the scan already splits wider and it is a no-op).
-    Pass ``min_tasks=N`` to force an exact floor (probes the physical
-    partitioning), or ``min_tasks=0`` to pin the input partitioning
-    (e.g. to preserve an upstream ordering).
+    A narrow input (e.g. one small parquet file scanning as a single
+    split) is round-robin repartitioned by ``rebalance_for_compute``
+    BEFORE the per-row proto encode, so the Python-side CPU work that
+    dominates this stage spreads across the cluster instead of
+    serializing onto one core (file-size split estimate, no plan->RDD
+    probe; at production scale the scan already splits wider and it is
+    a no-op). Output row order is therefore not the input order; the
+    split and TFRecord paths are order-independent (splits hash the
+    serialized bytes).
     """
     from ..session import rebalance_for_compute
 
-    if min_tasks is None:
-        df = rebalance_for_compute(df)
-    elif min_tasks and df.rdd.getNumPartitions() < min_tasks:
-        df = df.repartition(min_tasks)
+    df = rebalance_for_compute(df)
     names = df.columns
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -132,9 +125,9 @@ def encode_examples(
                 )
                 for row in pdf.itertuples(index=False, name=None)
             ]
-            yield pd.DataFrame({bytes_col: recs})
+            yield pd.DataFrame({"example": recs})
 
-    return df.mapInPandas(_encode, schema=f"{bytes_col} binary")
+    return df.mapInPandas(_encode, schema="example binary")
 
 
 def encode_sequence_examples(

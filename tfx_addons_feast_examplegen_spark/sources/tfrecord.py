@@ -11,11 +11,16 @@ Rebuilt here without TensorFlow: the TFRecord framing is public and tiny —
 crc32c (Castagnoli) is implemented with a precomputed table; the mask is
 ``((crc >> 15) | (crc << 17)) + 0xa282ead8``.
 
-Scale note: writing happens per-partition on executors via
-``foreachPartition`` — embarrassingly parallel, no shuffle, one file per
-partition per split (the same layout a FileFormat sink would produce).
-This is imperative I/O at the serialization edge, the one place the
-SURVEY sanctions mapPartitions-style code.
+One writer, :func:`write_partitioned_tfrecords`: a single
+``foreachPartition`` pass on executors — embarrassingly parallel, no
+shuffle, no driver-side probe job, one gzipped file per partition per
+split (the same layout a FileFormat sink would produce). This is
+imperative I/O at the serialization edge, the one place the SURVEY
+sanctions mapPartitions-style code.
+
+One reader, :func:`read_tfrecord_dataset`: gzipped files stream whole;
+uncompressed files (e.g. written by another producer) split into
+record-aligned chunks by hopping frame headers.
 """
 
 from __future__ import annotations
@@ -24,8 +29,6 @@ import gzip
 import os
 import struct
 import uuid
-
-from pyspark.sql import functions as F
 
 _CRC_TABLE = []
 _POLY = 0x82F63B78  # Castagnoli, reflected
@@ -63,42 +66,6 @@ def _write_record(f, rec: bytes) -> None:
     f.write(struct.pack("<I", _masked_crc(rec)))
 
 
-def write_tfrecords(
-    records,
-    path: str,
-    compress: bool = True,
-    *,
-    write_index: bool = False,
-    index_every: int = 256,
-) -> int:
-    """Write an iterable of bytes records as one TFRecord file. Returns count.
-
-    ``write_index=True`` (uncompressed files only) also writes a
-    ``<path>.idx`` sidecar: newline-separated ascending byte offsets of
-    every ``index_every``-th record boundary plus the final file size.
-    Readers split an indexed shard into record-aligned chunks WITHOUT
-    the header-hop pass — on object stores that turns ~n_records tiny
-    reads into one sidecar fetch. Gzip shards are not seekable, so the
-    index is skipped for them.
-    """
-    opener = gzip.open if compress else open
-    n = 0
-    offsets = [0]
-    with opener(path, "wb") as f:
-        for rec in records:
-            _write_record(f, rec)
-            n += 1
-            if not compress and n % index_every == 0:
-                offsets.append(f.tell())
-    if write_index and not compress:
-        size = os.path.getsize(path)
-        if offsets[-1] != size:
-            offsets.append(size)
-        with open(path + INDEX_SUFFIX, "w") as idx:
-            idx.write("\n".join(str(o) for o in offsets) + "\n")
-    return n
-
-
 def _iter_framed(f, origin: str):
     """Yield records from an open TFRecord stream, verifying both CRCs."""
     while True:
@@ -132,34 +99,6 @@ def _local_path(p: str) -> str | None:
     if "://" not in p and p.startswith("/"):
         return p
     return None
-
-
-INDEX_SUFFIX = ".idx"
-
-
-def _read_index_chunks(fs_path: str, target_bytes: int):
-    """Chunks from a ``.idx`` sidecar (newline-separated ascending byte
-    offsets of record boundaries, final line = file size): adjacent
-    blocks are coalesced up to ``target_bytes``. Returns None when no
-    valid sidecar exists — caller falls back to the header hop."""
-    idx_path = fs_path + INDEX_SUFFIX
-    if not os.path.exists(idx_path):
-        return None
-    try:
-        with open(idx_path) as f:
-            offs = [int(line) for line in f if line.strip()]
-    except ValueError:
-        return None
-    size = os.path.getsize(fs_path)
-    if len(offs) < 2 or offs[0] != 0 or offs[-1] != size or offs != sorted(offs):
-        return None  # stale or malformed sidecar: fall back, don't trust
-    chunks = []
-    start = offs[0]
-    for off in offs[1:]:
-        if off - start >= target_bytes or off == size:
-            chunks.append((start, off - start))
-            start = off
-    return [c for c in chunks if c[1] > 0] or [(0, 0)]
 
 
 def _scan_chunks(fs_path: str, origin: str, target_bytes: int):
@@ -288,8 +227,6 @@ def read_tfrecord_dataset(
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.tfrecord*")
         .load(path)
-        # .idx offset sidecars (write_index=True) are metadata, not data
-        .filter(~F.col("path").endswith(INDEX_SUFFIX))
     )
 
     batch_rows = 4096
@@ -349,9 +286,7 @@ def read_tfrecord_dataset(
                     if p.endswith(".gz"):
                         chunks = [(0, -1)]  # stream whole file
                     else:
-                        chunks = _read_index_chunks(
-                            fs, target_chunk_bytes
-                        ) or _scan_chunks(fs, p, target_chunk_bytes)
+                        chunks = _scan_chunks(fs, p, target_chunk_bytes)
                     for off, nb in chunks:
                         rows["path"].append(p)
                         rows["fs"].append(fs)
@@ -420,19 +355,19 @@ def write_partitioned_tfrecords(
     *,
     bytes_col: str = "example",
     split_col: str | None = None,
-    compress: bool = True,
-    write_index: bool = False,
-    index_every: int = 256,
     mode: str = "overwrite",
     file_prefix: str = "part",
 ) -> None:
-    """Executor-parallel TFRecord write, ``Split-{name}/`` layout.
+    """Executor-parallel gzipped TFRecord write, ``Split-{name}/`` layout.
 
     ``bytes_df``: DataFrame with a binary column (and optionally a split
-    column). Each task streams its partition's records into one open file
-    handle per split it sees — O(1) executor memory per handle regardless
-    of partition size, no shuffle — mirroring the reference's per-split
-    TFRecord dirs (``executor.py:186-188`` [delegated]).
+    column). One pass, one Spark job: each task streams its partition's
+    records into one open ``{file_prefix}-<uuid>.tfrecord.gz`` per split
+    it sees, creating that split's directory on first use — O(1)
+    executor memory per handle regardless of partition size, no
+    shuffle — mirroring the reference's per-split gzipped TFRecord dirs
+    (``executor.py:163,181,186-188`` [delegated]). A split with no rows
+    gets no directory.
 
     ``mode="overwrite"`` (default): re-running into the same ``out_dir``
     replaces the previous dataset — stale ``Split-*/`` dirs and
@@ -469,21 +404,10 @@ def write_partitioned_tfrecords(
             ):
                 os.remove(p)
     os.makedirs(out_dir, exist_ok=True)
-    if split_col is not None:
-        for r in bytes_df.select(split_col).distinct().collect():
-            os.makedirs(os.path.join(out_dir, f"Split-{r[0]}"), exist_ok=True)
-
-    suffix = ".gz" if compress else ""
-    opener = gzip.open if compress else open
-
-    index = write_index and not compress
 
     def _write_partition(rows):
         fid = uuid.uuid4().hex[:12]
         handles: dict[str, object] = {}
-        paths: dict[str, str] = {}
-        offsets: dict[str, list[int]] = {}
-        counts: dict[str, int] = {}
         try:
             for row in rows:
                 key = row[split_col] if split_col else ""
@@ -495,29 +419,14 @@ def write_partitioned_tfrecords(
                         else out_dir
                     )
                     os.makedirs(sub, exist_ok=True)
-                    p = os.path.join(
-                        sub, f"{file_prefix}-{fid}.tfrecord{suffix}"
+                    f = gzip.open(
+                        os.path.join(sub, f"{file_prefix}-{fid}.tfrecord.gz"),
+                        "wb",
                     )
-                    f = opener(p, "wb")
                     handles[key] = f
-                    paths[key] = p
-                    offsets[key] = [0]
-                    counts[key] = 0
                 _write_record(f, row[bytes_col])
-                if index:
-                    counts[key] += 1
-                    if counts[key] % index_every == 0:
-                        offsets[key].append(f.tell())
         finally:
             for f in handles.values():
                 f.close()
-        if index:
-            for key, p in paths.items():
-                offs = offsets[key]
-                size = os.path.getsize(p)
-                if offs[-1] != size:
-                    offs.append(size)
-                with open(p + INDEX_SUFFIX, "w") as idx:
-                    idx.write("\n".join(str(o) for o in offs) + "\n")
 
     bytes_df.foreachPartition(_write_partition)
