@@ -16,7 +16,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from tfx_addons_feast_examplegen_spark import queries as qmod
-from tfx_addons_feast_examplegen_spark.session import get_spark, register_tables
+from tfx_addons_feast_examplegen_spark.session import (
+    get_spark,
+    local_cpus,
+    register_tables,
+)
 
 # Headline set: the engine's core operator (PIT joins) + the heaviest
 # SQL-corpus queries. Extensions (dedup/similarity) are appended as they
@@ -425,7 +429,9 @@ def main() -> None:
     # the reported "cpus" field and the load gate must reflect that
     # setting — reporting os.cpu_count() here made the driver's scaling
     # check misfire (VERDICT r15 item 2: suspect_cpus_ignored).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
+    # local_cpus() is the count get_spark runs on, and rejects a
+    # malformed or non-positive setting.
+    cpus = local_cpus()
     timings, spread, pass_loads, floor_loads = _floor_timings(
         qs, names, spark, sf_dir, n_passes, cpus, stepper=stepper
     )

@@ -251,6 +251,19 @@ def test_param_substitution_quotes_strings():
         substitute_params("@t", {"t": dt.datetime(2024, 1, 15, 1, 2, 3)})
         == "TIMESTAMP '2024-01-15 01:02:03'"
     )
+    # only whole tokens: a longer token is another (unbound) name
+    assert (
+        substitute_params("@begin_ts, @begin_tsx", {"begin_ts": 1})
+        == "1, @begin_tsx"
+    )
+    # nothing inside quoted literals or identifiers, escapes included
+    assert (
+        substitute_params(
+            "SELECT '@v', 'it''s @v', 'a\\'@v', \"@v\", `@v` FROM t WHERE x = @v",
+            {"v": 2},
+        )
+        == "SELECT '@v', 'it''s @v', 'a\\'@v', \"@v\", `@v` FROM t WHERE x = 2"
+    )
 
 
 def test_unknown_format_rejected(spark, sf_dir):

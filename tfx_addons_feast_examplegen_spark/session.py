@@ -2,7 +2,7 @@
 
 The reference delegates session/context management to the TFX/Beam runtime
 (``executor.py:166-188``); here a tuned local session plays that role.
-Configs are chosen for the driver's local[32] harness but are the same
+Configs are chosen for a local[N] harness but are the same
 knobs that matter on a 1000-executor cluster: AQE on (runtime re-plan,
 skew-join splitting, partition coalescing), shuffle partitions sized to
 cores, Arrow enabled for the pandas-UDF edge.
@@ -29,12 +29,32 @@ TABLES = (
 )
 
 
+def local_cpus() -> int:
+    """Core count for the local master: ``$SPARK_GRAFT_CPUS`` when set,
+    else the cores this process may run on.
+
+    Raises ``ValueError`` naming the variable when it is set to anything
+    but a positive integer.
+    """
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return len(os.sched_getaffinity(0))
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus <= 0:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return cpus
+
+
 def get_spark(app_name: str = "tfx_addons_feast_examplegen_spark") -> SparkSession:
-    """Build (or reuse) a SparkSession tuned for the local test harness.
+    """Build (or reuse) a SparkSession tuned for the local test harness,
+    with ``local_cpus()`` cores and as many shuffle partitions.
 
     At cluster scale the same settings apply; only master/memory change.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

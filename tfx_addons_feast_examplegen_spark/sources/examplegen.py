@@ -22,12 +22,21 @@ is pure DataFrame — Catalyst-optimized, shuffle-minimal.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    CalendarIntervalType,
+    DataType,
+    MapType,
+    StructType,
+    VariantType,
+)
 
 from ..functions.tfexample import encode_example, encode_sequence_example
 from ..operators.pit_join import materialize_features
@@ -43,37 +52,52 @@ FORMAT_TF_SEQUENCE_EXAMPLE_FULL = "tf_sequence_example_full"  # working impl
 FORMAT_PARQUET = "parquet"  # engine-native default (no proto roundtrip)
 
 
+# A quoted SQL literal or identifier (skipped whole), or an @name token.
+# '' inside a literal lexes as two adjacent literals, which is still inside
+# quotes.
+_PARAM_TOKEN = re.compile(
+    r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|`[^`]*`|@(\w+)"
+)
+
+
 def substitute_params(query: str, params: dict[str, Any] | None) -> str:
     """Span/range bind-parameter substitution (SURVEY.md D2).
 
     The reference's TFX driver substitutes ``@begin_timestamp`` /
     ``@end_timestamp`` tokens into the entity query per ``range_config``
-    (``usage_prototype.py:46-48``). Same contract: ``@name`` tokens are
-    replaced with SQL literals (strings quoted, ``None`` as ``NULL``,
-    datetimes to the microsecond, others verbatim).
+    (``usage_prototype.py:46-48``). Same contract: each whole ``@name``
+    token outside quotes whose name is in ``params`` is replaced with a
+    SQL literal (strings quoted, ``None`` as ``NULL``, datetimes to the
+    microsecond, others verbatim). A longer token (``@begin_tsx``) and
+    text inside a quoted literal or identifier are left alone.
     """
     if not params:
         return query
+
+    def _sub(m: re.Match) -> str:
+        name = m.group(1)
+        if name is None or name not in params:
+            return m.group(0)
+        return _sql_literal(params[name])
+
+    return _PARAM_TOKEN.sub(_sub, query)
+
+
+def _sql_literal(value: Any) -> str:
     import datetime as dt
 
-    out = query
-    for name, value in sorted(params.items(), key=lambda kv: -len(kv[0])):
-        token = f"@{name}"
-        if value is None:
-            lit = "NULL"
-        elif isinstance(value, dt.datetime):
-            # isoformat omits a zero microsecond part; an aware value
-            # renders its wall clock, without the zone
-            ts = value.replace(tzinfo=None).isoformat(sep=" ")
-            lit = f"TIMESTAMP '{ts}'"
-        elif isinstance(value, dt.date):
-            lit = f"DATE '{value.isoformat()}'"
-        elif isinstance(value, str):
-            lit = "'" + value.replace("'", "''") + "'"
-        else:
-            lit = str(value)
-        out = out.replace(token, lit)
-    return out
+    if value is None:
+        return "NULL"
+    if isinstance(value, dt.datetime):
+        # isoformat omits a zero microsecond part; an aware value
+        # renders its wall clock, without the zone
+        ts = value.replace(tzinfo=None).isoformat(sep=" ")
+        return f"TIMESTAMP '{ts}'"
+    if isinstance(value, dt.date):
+        return f"DATE '{value.isoformat()}'"
+    if isinstance(value, str):
+        return "'" + value.replace("'", "''") + "'"
+    return str(value)
 
 
 def route_split_patterns(
@@ -95,6 +119,34 @@ def route_split_patterns(
     return out
 
 
+def _orderable(dt: DataType) -> bool:
+    """Whether Spark can sort on ``dt``: not a map, variant or calendar
+    interval, nor an array or struct holding one."""
+    if isinstance(dt, ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return not isinstance(dt, (MapType, VariantType, CalendarIntervalType))
+
+
+def _cluster(df: DataFrame, *lead: str) -> DataFrame:
+    """Sort each partition by ``lead``, then by every orderable column in
+    frame order.
+
+    A local sort, no shuffle. Sorted runs of keys and timestamps compress
+    far better in columnar and gzipped output. When every column is
+    orderable the order is total, so a file's bytes depend only on which
+    rows it holds, not on the order the upstream shuffles delivered them in.
+    """
+    rest = [
+        f.name for f in df.schema.fields
+        if f.name not in lead and _orderable(f.dataType)
+    ]
+    return df.sortWithinPartitions(
+        *[F.col("`" + c.replace("`", "``") + "`") for c in (*lead, *rest)]
+    )
+
+
 def encode_examples(df: DataFrame) -> DataFrame:
     """DataFrame -> one binary column ``example`` of serialized tf.Example
     bytes.
@@ -108,13 +160,15 @@ def encode_examples(df: DataFrame) -> DataFrame:
     dominates this stage spreads across the cluster instead of
     serializing onto one core (file-size split estimate, no plan->RDD
     probe; at production scale the scan already splits wider and it is
-    a no-op). Output row order is therefore not the input order; the
-    split and TFRecord paths are order-independent (splits hash the
-    serialized bytes).
+    a no-op). Each task then sorts its rows by every orderable column in
+    frame order (``_cluster``), so records come out in column order
+    within each task, not in the input order; gzipped shards of sorted
+    records are smaller. Record bytes do not depend on the order, and
+    splits hash the serialized bytes.
     """
     from ..session import rebalance_for_compute
 
-    df = rebalance_for_compute(df)
+    df = _cluster(rebalance_for_compute(df))
     names = df.columns
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -218,7 +272,9 @@ def generate_examples(
     disk).
 
     When ``output_dir`` is set the result is also written out:
-    ``FORMAT_PARQUET`` -> parquet partitioned by split;
+    ``FORMAT_PARQUET`` -> zstd parquet partitioned by split, each file's
+    rows sorted by every orderable column in frame order (the returned
+    frame is not sorted);
     ``FORMAT_TF_EXAMPLE`` -> gzipped TFRecords under ``Split-{name}/``;
     ``FORMAT_TF_SEQUENCE_EXAMPLE`` -> NotImplementedError (reference
     parity: converters.py:55-57);
@@ -257,8 +313,13 @@ def generate_examples(
 
     if output_dir:
         if output_format == FORMAT_PARQUET:
+            # Clustering on split first also meets partitionBy's ordering,
+            # so the writer adds no sort of its own; zstd on this writer
+            # only, not session-wide.
             (
-                out.write.mode("overwrite")
+                _cluster(out, "split")
+                .write.mode("overwrite")
+                .option("compression", "zstd")
                 .partitionBy("split")
                 .parquet(output_dir)
             )

@@ -25,6 +25,7 @@ record-aligned chunks by hopping frame headers.
 
 from __future__ import annotations
 
+import contextlib
 import gzip
 import os
 import struct
@@ -408,7 +409,7 @@ def write_partitioned_tfrecords(
     def _write_partition(rows):
         fid = uuid.uuid4().hex[:12]
         handles: dict[str, object] = {}
-        try:
+        with contextlib.ExitStack() as stack:
             for row in rows:
                 key = row[split_col] if split_col else ""
                 f = handles.get(key)
@@ -419,14 +420,15 @@ def write_partitioned_tfrecords(
                         else out_dir
                     )
                     os.makedirs(sub, exist_ok=True)
-                    f = gzip.open(
+                    raw = stack.enter_context(open(
                         os.path.join(sub, f"{file_prefix}-{fid}.tfrecord.gz"),
                         "wb",
-                    )
-                    handles[key] = f
+                    ))
+                    # No file name or time in the gzip header: a shard's
+                    # bytes depend only on its records.
+                    f = handles[key] = stack.enter_context(gzip.GzipFile(
+                        filename="", mode="wb", fileobj=raw, mtime=0
+                    ))
                 _write_record(f, row[bytes_col])
-        finally:
-            for f in handles.values():
-                f.close()
 
     bytes_df.foreachPartition(_write_partition)
