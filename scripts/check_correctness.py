@@ -5,18 +5,27 @@ Runs every ``queries()[name]`` on Spark and the matching
 compares row count, column names, and an order-insensitive value multiset.
 
 Usage: python scripts/check_correctness.py [sf_dir] [name ...]
+
+Checks the checkout this script sits in, so two checkouts can be
+compared side by side; the root also goes on ``PYTHONPATH`` for Spark's
+Python workers.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb  # noqa: E402
 
-import __spark_entry__ as entrymod  # noqa: E402
+from tfx_addons_feast_examplegen_spark.queries import oracle_sql, queries  # noqa: E402
 from tfx_addons_feast_examplegen_spark.session import TABLES, get_spark  # noqa: E402
 
 
@@ -49,8 +58,8 @@ def main() -> int:
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    qs = queries()
+    oracles = oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:

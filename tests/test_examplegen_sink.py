@@ -1,9 +1,11 @@
-"""ExampleGen sink layout: zstd parquet, rows clustered by column within
-each task, and output bytes that do not change from run to run."""
+"""ExampleGen sink layout: zstd parquet with INT64 timestamps and v2
+data pages, rows clustered by column within each task, and output bytes
+that do not change from run to run."""
 
 import datetime as dt
 import glob
 import hashlib
+import json
 import os
 
 import pyarrow.parquet as pq
@@ -59,29 +61,59 @@ def _split_digests(out_dir, pattern):
     return {k: sorted(v) for k, v in got.items()}
 
 
+def _read_back_matches(spark, frame, out):
+    """The written files read back through Spark equal ``frame``, with
+    the vectorized parquet reader on and off."""
+    key = "spark.sql.parquet.enableVectorizedReader"
+    before = spark.conf.get(key)
+    try:
+        for vectorized in ("true", "false"):
+            spark.conf.set(key, vectorized)
+            back = spark.read.parquet(out).select(*frame.columns)
+            assert back.exceptAll(frame).count() == 0, vectorized
+            assert frame.exceptAll(back).count() == 0, vectorized
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_parquet_sink_is_zstd_clustered_and_repeatable(spark, sf_dir, tmp_path):
     cols = [c for c in _run(spark, sf_dir, None, FORMAT_PARQUET).columns
             if c != "split"]
     runs = []
     for i in range(2):
         out = str(tmp_path / f"pq{i}")
-        _run(spark, sf_dir, out, FORMAT_PARQUET)
+        frame = _run(spark, sf_dir, out, FORMAT_PARQUET)
         files = glob.glob(os.path.join(out, "split=*", "*.parquet"))
         assert files
         n = 0
+        delta_int64 = False
         for f in files:
             meta = pq.read_metadata(f)
-            assert {
-                meta.row_group(g).column(c).compression
+            chunks = [
+                meta.row_group(g).column(c)
                 for g in range(meta.num_row_groups)
                 for c in range(meta.num_columns)
-            } == {"ZSTD"}, f
+            ]
+            assert {ch.compression for ch in chunks} == {"ZSTD"}, f
+            # INT64 micros, not legacy INT96, and tz-aware when read back
+            ts = meta.schema.column(cols.index("event_timestamp"))
+            assert ts.physical_type == "INT64", f
+            lt = json.loads(ts.logical_type.to_json())
+            assert (lt["Type"], lt["timeUnit"], lt["isAdjustedToUTC"]) == (
+                "Timestamp", "microseconds", True), f
+            # v2 data pages: delta encoding where a dictionary does not pay
+            delta_int64 |= any(
+                ch.physical_type == "INT64" and "DELTA_BINARY_PACKED" in ch.encodings
+                for ch in chunks
+            )
             table = pq.read_table(f)
             assert table.column_names == cols
             rows = list(zip(*(table.column(c).to_pylist() for c in cols)))
             assert _in_order(rows), f
             n += len(rows)
         assert n == 150
+        assert delta_int64
+        _read_back_matches(spark, frame, out)
         runs.append(_split_digests(out, "split=*/*.parquet"))
     assert set(runs[0]) == {"split=train", "split=eval"}
     assert runs[0] == runs[1]

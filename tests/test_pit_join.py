@@ -125,6 +125,30 @@ def test_multiple_entities_independent(spark):
     assert rows == {1: 10.0, 2: 20.0}
 
 
+def test_static_view_one_row_per_key_and_set_ops(spark, sf_dir):
+    from tfx_addons_feast_examplegen_spark.operators.pit_join import _static_join
+    from tfx_addons_feast_examplegen_spark.queries import queries
+
+    ent = spark.createDataFrame([(1,), (2,), (3,)], "uid long")
+    dim = spark.createDataFrame(
+        [(1, 5.0, "a"), (1, 6.0, "b"), (2, 7.0, "c")],
+        "uid long, x double, y string",
+    )
+    out = _static_join(ent, dim, join_keys=["uid"], features=["x", "y"],
+                       output_prefix="d_")
+    assert out.columns == ["uid", "d_x", "d_y"]
+    got = out.collect()
+    assert len(got) == 3  # a duplicated dimension key still gives one row
+    rows = {r.uid: (r.d_x, r.d_y) for r in got}
+    assert rows[1] in {(5.0, "a"), (6.0, "b")}  # both fields from one row
+    assert rows[2] == (7.0, "c")
+    assert rows[3] == (None, None)
+    # a left join onto a dropDuplicates frame failed set operations
+    assert out.exceptAll(out).count() == 0
+    multiview = queries()["pit_join_multiview"](spark, sf_dir)
+    assert multiview.exceptAll(multiview).count() == 0
+
+
 def test_per_snapshot_asof(spark):
     # Same entity at two snapshot times sees different feature versions.
     ent = _entities(spark, [(1, T(2024, 1, 5)), (1, T(2024, 1, 20))])

@@ -235,11 +235,21 @@ def _static_join(
 
     Extension beyond the reference (Feast views always carry event time);
     small dims broadcast automatically via AQE.
+
+    One row per key comes from ``first`` over a struct of the features,
+    the aggregate Spark itself plans ``dropDuplicates`` as. Spelled out,
+    because a left join onto a ``dropDuplicates`` frame fails set
+    operations on the result (``exceptAll`` raises
+    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND).
     """
-    feat = feature_df.select(
-        *[F.col(k).alias(f"__fk_{k}") for k in join_keys],
-        *[F.col(f).alias(f"{output_prefix}{f}") for f in features],
-    ).dropDuplicates([f"__fk_{k}" for k in join_keys])
+    feat = (
+        feature_df.groupBy(*[F.col(k).alias(f"__fk_{k}") for k in join_keys])
+        .agg(F.first(F.struct(*features)).alias("__fv"))
+        .select(
+            *[f"__fk_{k}" for k in join_keys],
+            *[F.col(f"__fv.`{f}`").alias(f"{output_prefix}{f}") for f in features],
+        )
+    )
     cond = None
     for k in join_keys:
         c = entity_df[k] == feat[f"__fk_{k}"]

@@ -52,6 +52,13 @@ def get_spark(app_name: str = "tfx_addons_feast_examplegen_spark") -> SparkSessi
     """Build (or reuse) a SparkSession tuned for the local test harness,
     with ``local_cpus()`` cores and as many shuffle partitions.
 
+    Parquet writes store ``TimestampType`` as INT64
+    TIMESTAMP(MICROS, isAdjustedToUTC=true) rather than legacy INT96.
+    This is set for the whole session because Spark's parquet write job
+    takes ``spark.sql.parquet.outputTimestampType`` from the session conf,
+    over any per-writer option. Spark reads both layouts, so the package's
+    other parquet writers are unaffected.
+
     At cluster scale the same settings apply; only master/memory change.
     """
     cpus = local_cpus()
@@ -86,6 +93,10 @@ def get_spark(app_name: str = "tfx_addons_feast_examplegen_spark") -> SparkSessi
         # as long nanos and normalize in load_table (lossless: fixture data
         # is microsecond-granular).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # INT64 micros instead of 12-byte INT96: lossless (TimestampType
+        # is microsecond precision), delta-encodable, and pyarrow reads
+        # it back tz-aware. Session-wide: see the docstring.
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # Managed-table home for bucketed feature tables (static conf).
         .config(
             "spark.sql.warehouse.dir",

@@ -274,7 +274,9 @@ def generate_examples(
     When ``output_dir`` is set the result is also written out:
     ``FORMAT_PARQUET`` -> zstd parquet partitioned by split, each file's
     rows sorted by every orderable column in frame order (the returned
-    frame is not sorted);
+    frame is not sorted), written with v2 data pages (delta encodings;
+    readers need Spark >= 3.3 or pyarrow) and, under ``get_spark``'s
+    session, INT64 microsecond UTC timestamps;
     ``FORMAT_TF_EXAMPLE`` -> gzipped TFRecords under ``Split-{name}/``;
     ``FORMAT_TF_SEQUENCE_EXAMPLE`` -> NotImplementedError (reference
     parity: converters.py:55-57);
@@ -314,12 +316,14 @@ def generate_examples(
     if output_dir:
         if output_format == FORMAT_PARQUET:
             # Clustering on split first also meets partitionBy's ordering,
-            # so the writer adds no sort of its own; zstd on this writer
-            # only, not session-wide.
+            # so the writer adds no sort of its own; zstd and v2 data
+            # pages (delta encodings) on this writer only, not
+            # session-wide.
             (
                 _cluster(out, "split")
                 .write.mode("overwrite")
                 .option("compression", "zstd")
+                .option("parquet.writer.version", "v2")
                 .partitionBy("split")
                 .parquet(output_dir)
             )
