@@ -391,11 +391,12 @@ def _join_uw(ent, feat, **kw):
 
 def test_union_window_edge_semantics(spark):
     # The mandated edge list in one fixture: inclusive as-of, future
-    # leak, created tie-break, no-match NULL, per-entity independence.
+    # leak, created tie-break, no-match NULL, per-entity independence,
+    # and a NULL feature timestamp that never matches (as under `pair`).
     ent = _entities(
         spark,
         [(1, T(2024, 1, 10)), (1, T(2024, 1, 2)), (2, T(2024, 1, 10)),
-         (3, T(2024, 1, 10))],
+         (3, T(2024, 1, 10)), (4, T(2024, 1, 10))],
     )
     feat = _features(
         spark,
@@ -405,6 +406,7 @@ def test_union_window_edge_semantics(spark):
             (1, T(2024, 1, 10), 9, 25.0),   # same ts: created wins
             (1, T(2024, 1, 11), 3, 30.0),   # future: must not leak
             (2, T(2024, 1, 4), 1, 40.0),
+            (4, None, 1, 50.0),             # NULL ts: never as-of
         ],
     )
     got = {(r.uid, r.ts): r.val for r in _join_uw(ent, feat).collect()}
@@ -413,6 +415,10 @@ def test_union_window_edge_semantics(spark):
         (1, T(2024, 1, 2)): 10.0,
         (2, T(2024, 1, 10)): 40.0,
         (3, T(2024, 1, 10)): None,
+        (4, T(2024, 1, 10)): None,
+    }
+    assert got == {
+        (r.uid, r.ts): r.val for r in _join(ent, feat).collect()
     }
 
 

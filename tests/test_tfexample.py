@@ -29,6 +29,9 @@ def test_roundtrip_scalars():
         "b": b"\x00\x01",
         "flag": True,
         "neg": -3,
+        # beyond float32 range: stored as +-inf, as protobuf does
+        "huge": 1e39,
+        "tiny": -1e39,
     }
     out = decode_example(encode_example(row))
     assert out["i"] == [7]
@@ -37,6 +40,8 @@ def test_roundtrip_scalars():
     assert out["b"] == [b"\x00\x01"]
     assert out["flag"] == [1]
     assert out["neg"] == [-3]
+    assert out["huge"] == [math.inf]
+    assert out["tiny"] == [-math.inf]
 
 
 def test_roundtrip_lists_and_null():
@@ -119,14 +124,22 @@ def test_generate_examples_end_to_end(spark, sf_dir, tmp_path):
 
     register_tables(spark, sf_dir)
     out_dir = str(tmp_path / "examples")
+    # every 4th spine row has no customer key, so its int feature
+    # c_nationkey is NULL
     df = generate_examples(
         spark,
         registry=testdata_registry(),
         entity_query="""
-            SELECT c_custkey AS user_id, @snapshot AS event_timestamp
+            SELECT c_custkey AS user_id,
+                   IF(c_custkey % 4 = 0, NULL, c_custkey) AS c_custkey,
+                   @snapshot AS event_timestamp
             FROM customer WHERE c_custkey < 50
         """,
-        features=["user_events:value", "user_events:event_type"],
+        features=[
+            "user_events:value",
+            "user_events:event_type",
+            "customer_profile:c_nationkey",
+        ],
         sf_dir=sf_dir,
         output_dir=out_dir,
         params={"snapshot": dt.datetime(2024, 1, 15)},
@@ -137,13 +150,22 @@ def test_generate_examples_end_to_end(spark, sf_dir, tmp_path):
     assert files, "no TFRecord files written"
     n = 0
     seen_users = set()
+    null_nations = 0
     for f in files:
         for rec in read_tfrecords(f):
             ex = decode_example(rec)
-            assert set(ex) == {"user_id", "event_timestamp", "value", "event_type"}
+            assert set(ex) == {
+                "user_id", "c_custkey", "event_timestamp", "value",
+                "event_type", "c_nationkey",
+            }
             seen_users.add(ex["user_id"][0])
+            # int features stay int64_list in every record, nulls or not
+            for name in ("user_id", "c_custkey", "c_nationkey"):
+                assert all(type(v) is int for v in ex[name] or []), ex
+            null_nations += ex["c_nationkey"] is None
             n += 1
     assert n == 50
+    assert null_nations == 13  # c_custkey 0, 4, ..., 48
     assert seen_users == set(range(50))
     # both splits materialized with the default 2:1 config
     assert {os.path.basename(os.path.dirname(f)) for f in files} == {
@@ -569,7 +591,9 @@ def test_read_tfrecord_dataset_roundtrip_and_nulls(spark, tmp_path):
     )
 
     recs = [
-        encode_example({"k": 1, "name": "a", "extra": 10, "ids": [7, 8]}),
+        encode_example(
+            {"k": 1, "name": "a", "extra": 2**60 + 1, "ids": [7, 8]}
+        ),
         encode_example({"k": 2, "name": "b", "ids": [9]}),  # no 'extra'
     ]
     with open(tmp_path / "part-0.tfrecord", "wb") as fh:
@@ -581,7 +605,8 @@ def test_read_tfrecord_dataset_roundtrip_and_nulls(spark, tmp_path):
         StructType.fromDDL("k long, name string, extra long, ids array<long>"),
     )
     rows = sorted((r.k, r.name, r.extra, tuple(r.ids)) for r in df.collect())
-    assert rows == [(1, "a", 10, (7, 8)), (2, "b", None, (9,))]
+    # 2**60 + 1 shares a batch with the null: exact, not rounded
+    assert rows == [(1, "a", 2**60 + 1, (7, 8)), (2, "b", None, (9,))]
 
     # a repeated feature read into a scalar field must refuse, not truncate
     import pytest
@@ -796,3 +821,43 @@ def test_encode_examples_floors_task_count(spark, tmp_path):
     out = encode_examples(df)
     assert out.columns == ["example"]
     assert out.rdd.getNumPartitions() >= min(target, 1000)
+
+
+def test_encode_examples_keeps_int_kind_nan_and_int64(spark):
+    # One partition, so every row shares one Arrow batch with the nulls:
+    # an int64 column holding a null stays int64_list (not float_list),
+    # 2**60 + 1 survives exactly, a NaN double is float_list [nan], and
+    # each null is an empty feature.
+    from tfx_addons_feast_examplegen_spark.sources.examplegen import (
+        encode_examples,
+    )
+
+    big = 2**60 + 1
+    df = spark.createDataFrame(
+        [(1, 0.5, big), (None, float("nan"), 2), (3, None, None)],
+        "i long, d double, big long",
+    ).coalesce(1)
+    got = sorted(
+        (decode_example(r.example) for r in encode_examples(df).collect()),
+        key=lambda ex: ex["i"] or [0],
+    )
+    assert [ex["i"] for ex in got] == [None, [1], [3]]
+    assert [ex["big"] for ex in got] == [[2], [big], None]
+    for ex in got:
+        for name in ("i", "big"):
+            assert all(type(v) is int for v in ex[name] or []), ex
+    assert math.isnan(got[0]["d"][0]) and len(got[0]["d"]) == 1
+    assert got[1]["d"] == [0.5]
+    assert got[2]["d"] is None
+
+    # a timestamp encodes as its instant, whatever the session time zone
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        (rec,) = encode_examples(
+            spark.sql("SELECT TIMESTAMP '2024-01-15 00:00:00' AS t")
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    want = dt.datetime(2024, 1, 15, 5, tzinfo=dt.timezone.utc).timestamp()
+    assert math.isclose(decode_example(rec.example)["t"][0], want, rel_tol=1e-7)

@@ -34,6 +34,7 @@ comparable across runs/engines, which the hash-split D1 relies on).
 from __future__ import annotations
 
 import datetime as dt
+import math
 import struct
 from typing import Any
 
@@ -70,6 +71,10 @@ def _len_delim(field: int, payload: bytes) -> bytes:
 # Feature encoders
 # ---------------------------------------------------------------------------
 
+# The smallest double that rounds past float32's largest finite value;
+# struct.pack raises from here on, where a float32 cast gives +-inf.
+_FLOAT32_OVERFLOW = 2.0**128 * (1 - 2.0**-25)
+
 
 def _bytes_list(values: list[bytes]) -> bytes:
     body = b"".join(_len_delim(1, v) for v in values)
@@ -77,6 +82,10 @@ def _bytes_list(values: list[bytes]) -> bytes:
 
 
 def _float_list(values: list[float]) -> bytes:
+    values = [
+        math.copysign(math.inf, v) if abs(v) >= _FLOAT32_OVERFLOW else v
+        for v in values
+    ]
     packed = struct.pack(f"<{len(values)}f", *values)
     body = _len_delim(1, packed) if values else b""
     return _len_delim(2, body)  # Feature.float_list = 2

@@ -556,7 +556,9 @@ def point_in_time_join_union_window(
     # Null join keys never match under equi-join semantics: drop them
     # from the stream (partitionBy would otherwise group NULLs together
     # and leak features across "equal" null keys). Spine rows with null
-    # keys still survive via the final left join.
+    # keys still survive via the final left join. A feature row with a
+    # null event time never satisfies `feature.ts <= entity.ts` either
+    # (it would sort first and be carried), so it goes too.
     def _non_null(df: DataFrame, cols: list[str]) -> DataFrame:
         cond = None
         for c in cols:
@@ -564,7 +566,7 @@ def point_in_time_join_union_window(
             cond = k if cond is None else (cond & k)
         return df.filter(cond)
 
-    feat_stream = _non_null(feature_df, join_keys).select(
+    feat_stream = _non_null(feature_df, [*join_keys, feature_ts_col]).select(
         *[F.col(k).alias(f"__ek_{k}") for k in join_keys],
         F.col(feature_ts_col).alias("__ts"),
         F.lit(0).alias("__is_spine"),

@@ -369,8 +369,13 @@ _DRIVER_PRIORITY = [
     "feature_service",
     "fuzzy_editdist_pairs",
     "global_row_ids",
-    "html_text_extract",
-    "interval_overlap_join",
+    # The union_window strategy now drops feature rows with a NULL event
+    # time, and the tf.Example float encoder stores out-of-range doubles
+    # as +-inf, so these two fingerprints moved; they take the fill slots
+    # of html_text_extract and interval_overlap_join (driver-green since
+    # r10, no attestation debt).
+    "pit_join_union_window",
+    "sequence_example_roundtrip",
     "param_substitution",
     "pit_join_composite_key",
     "pit_join_field_mapping",

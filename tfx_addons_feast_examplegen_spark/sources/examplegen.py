@@ -14,10 +14,12 @@ The engine equivalent::
     generate_examples(spark, registry=reg, entity_query=sql,
                       features=[...], sf_dir=..., output_dir=...)
 
-Encoding runs in ``mapInPandas`` (Arrow-batched; the per-row proto encode
-is the same per-row map the reference runs in ``beam.Map`` at
-``executor.py:156-160``, but batched). Everything upstream of the encode
-is pure DataFrame — Catalyst-optimized, shuffle-minimal.
+Encoding runs in ``mapInArrow``: each Arrow batch becomes plain Python
+rows (``RecordBatch.to_pylist``), so an int64 column stays int even when
+it holds a null, and the per-row proto encode is the same per-row map the
+reference runs in ``beam.Map`` at ``executor.py:156-160``, but batched.
+Everything upstream of the encode is pure DataFrame — Catalyst-optimized,
+shuffle-minimal.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ import re
 from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -151,8 +153,12 @@ def encode_examples(df: DataFrame) -> DataFrame:
     """DataFrame -> one binary column ``example`` of serialized tf.Example
     bytes.
 
-    Arrow-batched ``mapInPandas``; per-batch Python loop only at this
-    terminal stage (parity with the reference's beam.Map encode).
+    Arrow-batched ``mapInArrow``; per-batch Python loop only at this
+    terminal stage (parity with the reference's beam.Map encode). Rows
+    reach the codec as plain Python values under the reference's type
+    map: an int column is int64_list in every record (a null is an empty
+    feature, never a float), int64 values are exact, and a NaN double is
+    float_list ``[nan]``.
 
     A narrow input (e.g. one small parquet file scanning as a single
     split) is round-robin repartitioned by ``rebalance_for_compute``
@@ -168,20 +174,16 @@ def encode_examples(df: DataFrame) -> DataFrame:
     """
     from ..session import rebalance_for_compute
 
-    df = _cluster(rebalance_for_compute(df))
-    names = df.columns
+    def _encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            recs = [encode_example(row) for row in batch.to_pylist()]
+            yield pa.RecordBatch.from_pydict(
+                {"example": pa.array(recs, pa.binary())}
+            )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [
-                encode_example(
-                    {n: _py(v) for n, v in zip(names, row)}
-                )
-                for row in pdf.itertuples(index=False, name=None)
-            ]
-            yield pd.DataFrame({"example": recs})
-
-    return df.mapInPandas(_encode, schema="example binary")
+    return _cluster(rebalance_for_compute(df)).mapInArrow(
+        _encode, schema="example binary"
+    )
 
 
 def encode_sequence_examples(
@@ -200,7 +202,7 @@ def encode_sequence_examples(
     the keys (+ optional ``context_cols``, taken from the first step) as
     context features. The grouping/ordering runs as a native
     ``sort_array(collect_list(struct(...)))`` aggregate — one shuffle on
-    the key — and only the terminal proto encode is Python (mapInPandas).
+    the key — and only the terminal proto encode is Python (mapInArrow).
     """
     from ..functions.tfexample import encode_sequence_example_full
 
@@ -213,39 +215,22 @@ def encode_sequence_examples(
     grouped = df.groupBy(*key_cols).agg(
         F.sort_array(F.collect_list(step)).alias("__steps")
     )
-    names = key_cols + ["__steps"]
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def _encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             out = []
-            for row in pdf.itertuples(index=False, name=None):
-                rec = dict(zip(names, row))
+            for rec in batch.to_pylist():
                 steps = rec["__steps"]
-                context = {k: _py(rec[k]) for k in key_cols}
+                context = {k: rec[k] for k in key_cols}
                 for c in context_cols:
-                    context[c] = _py(steps[0][c]) if len(steps) else None
-                fls = {
-                    c: [_py(s[c]) for s in steps] for c in sequence_cols
-                }
+                    context[c] = steps[0][c] if steps else None
+                fls = {c: [s[c] for s in steps] for c in sequence_cols}
                 out.append(encode_sequence_example_full(context, fls))
-            yield pd.DataFrame({bytes_col: out})
+            yield pa.RecordBatch.from_pydict(
+                {bytes_col: pa.array(out, pa.binary())}
+            )
 
-    return grouped.mapInPandas(_encode, schema=f"{bytes_col} binary")
-
-
-def _py(v: Any) -> Any:
-    """numpy/pandas scalar -> plain Python for the codec."""
-    if v is None or v is pd.NaT:
-        return None
-    if isinstance(v, float) and pd.isna(v):
-        return None
-    if hasattr(v, "item"):  # numpy scalar
-        return v.item()
-    if isinstance(v, pd.Timestamp):
-        return v.to_pydatetime()
-    if isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-        return [_py(x) for x in v]
-    return v
+    return grouped.mapInArrow(_encode, schema=f"{bytes_col} binary")
 
 
 def generate_examples(

@@ -178,9 +178,9 @@ def read_tfrecord_dataset(
     loses data).
     """
     import io
-    from collections.abc import Iterator
 
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import (
         ArrayType,
         BinaryType,
@@ -190,12 +190,14 @@ def read_tfrecord_dataset(
         IntegerType,
         LongType,
         StringType,
+        StructType,
     )
 
     from ..functions.tfexample import decode_example
 
     names = [f.name for f in schema.fields]
     types = {f.name: f.dataType for f in schema.fields}
+    arrow_schema = to_arrow_schema(schema)
 
     def _scalar(v0, dt, name):
         if isinstance(dt, (LongType, IntegerType)):
@@ -232,26 +234,23 @@ def read_tfrecord_dataset(
 
     batch_rows = 4096
 
-    def _flush_ready(cols, force=False):
+    def _flush(cols, force=False):
         n_done = len(cols[names[0]]) if names else 0
         if n_done and (force or n_done >= batch_rows):
-            out = pd.DataFrame(cols, columns=names)
-            for n in names:
-                cols[n] = []
-            return out
-        return None
+            batch = pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
+            for c in cols.values():
+                c.clear()
+            yield batch
 
     def _decode_stream(f, origin, cols):
         """Decode records from an open framed stream into ``cols``,
-        yielding a bounded DataFrame every ``batch_rows`` records — flat
+        yielding a bounded Arrow batch every ``batch_rows`` records — flat
         memory even when one (gzip) stream holds millions of records."""
         for rec in _iter_framed(f, origin):
             ex = decode_example(rec)
             for n in names:
                 cols[n].append(_coerce(ex.get(n), types[n], n))
-            out = _flush_ready(cols)
-            if out is not None:
-                yield out
+            yield from _flush(cols)
 
     # --- local (file:) scheme: chunked + streaming decode ---------------
     files = [
@@ -280,33 +279,32 @@ def read_tfrecord_dataset(
             [(p, fs) for p, fs, _ in local_files], "path string, fs string"
         ).repartition(max(1, min(len(local_files), 256)))
 
-        def _index(batches):
-            for pdf in batches:
-                rows = {"path": [], "fs": [], "offset": [], "nbytes": []}
-                for p, fs in zip(pdf["path"], pdf["fs"]):
-                    if p.endswith(".gz"):
-                        chunks = [(0, -1)]  # stream whole file
-                    else:
-                        chunks = _scan_chunks(fs, p, target_chunk_bytes)
-                    for off, nb in chunks:
-                        rows["path"].append(p)
-                        rows["fs"].append(fs)
-                        rows["offset"].append(off)
-                        rows["nbytes"].append(nb)
-                yield pd.DataFrame(rows)
+        index_ddl = "path string, fs string, offset long, nbytes long"
+        index_schema = to_arrow_schema(StructType.fromDDL(index_ddl))
 
-        chunks_df = paths_df.mapInPandas(
-            _index, schema="path string, fs string, offset long, nbytes long"
-        )
+        def _index(batches):
+            for batch in batches:
+                rows = [
+                    {**r, "offset": off, "nbytes": nb}
+                    for r in batch.to_pylist()
+                    for off, nb in (
+                        [(0, -1)]  # gzip: stream the whole file
+                        if r["path"].endswith(".gz")
+                        else _scan_chunks(
+                            r["fs"], r["path"], target_chunk_bytes
+                        )
+                    )
+                ]
+                yield pa.RecordBatch.from_pylist(rows, schema=index_schema)
+
+        chunks_df = paths_df.mapInArrow(_index, schema=index_ddl)
         n_parallel = spark.sparkContext.defaultParallelism
         chunks_df = chunks_df.repartition(n_parallel)
 
-        def _parse_chunks(batches: "Iterator[pd.DataFrame]"):
+        def _parse_chunks(batches):
             cols: dict[str, list] = {n: [] for n in names}
-            for pdf in batches:
-                for p, fs, off, nb in zip(
-                    pdf["path"], pdf["fs"], pdf["offset"], pdf["nbytes"]
-                ):
+            for batch in batches:
+                for p, fs, off, nb in zip(*batch.to_pydict().values()):
                     if nb == -1:  # gzip: stream, O(record) memory
                         with open(fs, "rb") as raw, gzip.GzipFile(
                             fileobj=raw
@@ -314,14 +312,12 @@ def read_tfrecord_dataset(
                             yield from _decode_stream(f, p, cols)
                     elif nb > 0:  # bounded chunk read
                         with open(fs, "rb") as f:
-                            f.seek(int(off))
-                            chunk = io.BytesIO(f.read(int(nb)))
+                            f.seek(off)
+                            chunk = io.BytesIO(f.read(nb))
                         yield from _decode_stream(chunk, p, cols)
-            out = _flush_ready(cols, force=True)
-            if out is not None:
-                yield out
+            yield from _flush(cols, force=True)
 
-        return chunks_df.mapInPandas(_parse_chunks, schema=schema)
+        return chunks_df.mapInArrow(_parse_chunks, schema=schema)
 
     # --- non-local fallback: whole-file loads (binaryFile) --------------
     oversize = [(p, ln) for p, ln in files if ln > max_compressed_file_bytes]
@@ -335,19 +331,16 @@ def read_tfrecord_dataset(
             "here — write smaller shards or raise the limit explicitly."
         )
 
-    def _parse(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+    def _parse(batches):
         cols: dict[str, list] = {n: [] for n in names}
-        for pdf in batches:
-            for p, content in zip(pdf["path"], pdf["content"]):
-                blob = bytes(content)
+        for batch in batches:
+            for p, blob in zip(*batch.to_pydict().values()):
                 if p.endswith(".gz"):
                     blob = gzip.decompress(blob)
                 yield from _decode_stream(io.BytesIO(blob), p, cols)
-        out = _flush_ready(cols, force=True)
-        if out is not None:
-            yield out
+        yield from _flush(cols, force=True)
 
-    return listing.select("path", "content").mapInPandas(_parse, schema=schema)
+    return listing.select("path", "content").mapInArrow(_parse, schema=schema)
 
 
 def write_partitioned_tfrecords(
