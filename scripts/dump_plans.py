@@ -118,8 +118,9 @@ joins candidates back to the FULL pinned shingle sets. More exchanges
 than the explode (the df join and window are extra stages) — its win
 is exactness without caps on boilerplate-heavy corpora, not raw speed
 on rare-shingle ones (measured trade in the operator docstring).""",
-    "pit_join_union_window": """The linear-per-key as-of strategy. The feature and spine streams
-Union into ONE hash Exchange on the join key; a single Sort by
+    "pit_join_union_window": """The linear-per-key as-of strategy, point_in_time_join(strategy=
+"union_window"). The feature and spine streams Union into ONE hash
+Exchange on the join key; a single Sort by
 (key, ts, side, created) feeds a Window whose running RowFrame
 (UNBOUNDED PRECEDING .. CURRENT ROW last(ignorenulls)) carries the
 newest payload onto each spine row in O(n) per partition — no
@@ -419,17 +420,18 @@ def main() -> None:
     register_tables(spark, sf_dir)
     qs = queries()
     sections = []
-    from tfx_addons_feast_examplegen_spark.operators.pit_join import (
-        last_strategy_choices,
-    )
+    from tfx_addons_feast_examplegen_spark.operators import pit_join
 
     for name, comment in COMMENT.items():
+        # Record WHICH physical as-of shape produced this plan. Only
+        # materialize_features records a choice; an entry that calls
+        # point_in_time_join(strategy=...) itself names it in its comment,
+        # so clear the previous entry's choices first.
+        pit_join._LAST_STRATEGY_CHOICES.clear()
         df = qs[name](spark, sf_dir)
         tree = plan_text(df).split("\n\n", 1)[0]
         s = plan_summary(df)
-        # Record WHICH physical as-of shape produced this plan (per-view
-        # registry strategy resolution; VERDICT r9 item 4).
-        choices = last_strategy_choices() if name.startswith("pit_join") else {}
+        choices = pit_join.last_strategy_choices()
         strat_line = (
             "As-of strategy chosen per view: "
             + ", ".join(f"{v}={st}" for v, st in sorted(choices.items()))

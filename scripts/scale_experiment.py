@@ -72,9 +72,9 @@ def main() -> None:
         created_col="event_id",
         ttl_seconds=7 * 24 * 3600,
     )
-    for label, bucketed in [("plain-range", False), ("time-bucketed", True)]:
+    for label, strategy in [("plain-range", "pair"), ("time-bucketed", "time_bucketed")]:
         t0 = time.time()
-        out = point_in_time_join(spine, ev, time_bucketed=bucketed, **kw)
+        out = point_in_time_join(spine, ev, strategy=strategy, **kw)
         out.write.mode("overwrite").format("noop").save()
         print(f"{label:14s} {time.time() - t0:6.1f}s")
 

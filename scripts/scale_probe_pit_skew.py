@@ -49,10 +49,7 @@ import time
 sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 
-from tfx_addons_feast_examplegen_spark.operators.pit_join import (
-    point_in_time_join,
-    point_in_time_join_union_window,
-)
+from tfx_addons_feast_examplegen_spark.operators.pit_join import point_in_time_join
 from tfx_addons_feast_examplegen_spark.session import get_spark
 
 N_EVENTS, N_SPINE, N_KEYS = 10_000_000, 2_000_000, 100_000
@@ -101,9 +98,7 @@ def make_sides(skewed: bool):
     )
 
 
-def run(
-    ev, sp, *, time_bucketed: bool = False, union_window: bool = False
-) -> tuple[float, int]:
+def run(ev, sp, *, strategy: str = "pair") -> tuple[float, int]:
     kw = dict(
         join_keys=["user_id"],
         entity_ts_col="event_timestamp",
@@ -112,10 +107,7 @@ def run(
         created_col="event_id",
         ttl_seconds=TTL,
     )
-    if union_window:
-        out = point_in_time_join_union_window(sp, ev, **kw)
-    else:
-        out = point_in_time_join(sp, ev, time_bucketed=time_bucketed, **kw)
+    out = point_in_time_join(sp, ev, strategy=strategy, **kw)
     n = out.count()  # warm + row-count equivalence evidence
     best = float("inf")
     for _ in range(2):
@@ -158,9 +150,9 @@ if not auto_only:
     report("skewed skewfix-off", ev_s, sp_s)
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
 
-    report("skewed time-bucketed", ev_s, sp_s, time_bucketed=True)
-    report("skewed union-window", ev_s, sp_s, union_window=True)
-    report("uniform union-window", ev_u, sp_u, union_window=True)
+    report("skewed time-bucketed", ev_s, sp_s, strategy="time_bucketed")
+    report("skewed union-window", ev_s, sp_s, strategy="union_window")
+    report("uniform union-window", ev_u, sp_u, strategy="union_window")
 
 # ---- auto-selection end-to-end (round 10) ---------------------------
 # materialize_features must pick the mitigation ITSELF: the registry-
@@ -179,8 +171,8 @@ from tfx_addons_feast_examplegen_spark.registry import (  # noqa: E402
 )
 
 if auto_only:  # pinned references so the auto numbers are interpretable
-    report("skewed time-bucketed", ev_s, sp_s, time_bucketed=True)
-    report("skewed union-window", ev_s, sp_s, union_window=True)
+    report("skewed time-bucketed", ev_s, sp_s, strategy="time_bucketed")
+    report("skewed union-window", ev_s, sp_s, strategy="union_window")
 
 sp_s.createOrReplaceTempView("skewed_spine")
 for label, ttl in (("auto-ttl", TTL), ("auto-unbounded", None)):

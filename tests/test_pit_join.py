@@ -207,33 +207,42 @@ def test_field_mapping_renames(spark, sf_dir):
     assert len(rows) > 0
 
 
-def test_time_bucketed_equivalence(spark, sf_dir):
-    # The bucketed interval join must produce byte-identical results to
-    # the naive range join (SURVEY.md §4.2 scale technique).
+def test_feature_name_collisions_raise(spark, sf_dir):
+    # Two sources of one output column fail by name instead of returning
+    # duplicate columns (Feast's FeatureNameCollisionError).
+    from tfx_addons_feast_examplegen_spark.operators.pit_join import (
+        materialize_features,
+    )
+    from tfx_addons_feast_examplegen_spark.registry import (
+        RegistryError,
+        testdata_registry,
+    )
     from tfx_addons_feast_examplegen_spark.session import register_tables
 
-    t = register_tables(spark, sf_dir)
-    spine = spark.sql("""
-        SELECT c_custkey AS user_id, event_timestamp
-        FROM customer CROSS JOIN (VALUES (TIMESTAMP '2024-01-08 00:00:00'),
-            (TIMESTAMP '2024-01-15 00:00:00'), (TIMESTAMP '2024-01-22 12:34:56'),
-            (TIMESTAMP '2024-01-29 00:00:00')) AS v(event_timestamp)
-    """)
-    kw = dict(
-        join_keys=["user_id"],
-        entity_ts_col="event_timestamp",
-        feature_ts_col="ts",
-        features=["value", "event_type"],
-        created_col="event_id",
-        ttl_seconds=7 * 24 * 3600,
+    register_tables(spark, sf_dir)
+    spine = """
+        SELECT c_custkey AS user_id, c_acctbal AS VALUE,
+               TIMESTAMP '2024-01-20 00:00:00' AS event_timestamp
+        FROM customer WHERE c_custkey < 20
+    """
+    run = lambda feats, **kw: materialize_features(  # noqa: E731
+        spark, entity_query=spine, features=feats,
+        registry=testdata_registry(), sf_dir=sf_dir, **kw,
     )
-    plain = point_in_time_join(spine, t["events"], **kw)
-    bucketed = point_in_time_join(spine, t["events"], time_bucketed=True, **kw)
-    key = lambda r: (r.user_id, r.event_timestamp)
-    a = sorted(((key(r), r.value, r.event_type) for r in plain.collect()))
-    b = sorted(((key(r), r.value, r.event_type) for r in bucketed.collect()))
-    assert a == b
-    assert len(a) == plain.count()
+    two_views = ["user_events:event_type", "user_events_7d:event_type"]
+    with pytest.raises(
+        RegistryError,
+        match=r"'event_type' of view 'user_events_7d' collides with column "
+        r"'event_type' of view 'user_events'.*full_feature_names=True.*field_mapping",
+    ):
+        run(two_views)
+    # the entity query's columns count too, case-insensitively
+    with pytest.raises(
+        RegistryError, match=r"'value' of view 'user_events' .* 'VALUE' of the entity query"
+    ):
+        run(["user_events:value"])
+    df = run(two_views, full_feature_names=True)
+    assert df.columns[-2:] == ["user_events__event_type", "user_events_7d__event_type"]
 
 
 def test_time_bucketed_requires_ttl(spark):
@@ -241,8 +250,8 @@ def test_time_bucketed_requires_ttl(spark):
 
     ent = _entities(spark, [(1, T(2024, 1, 10))])
     feat = _features(spark, [(1, T(2024, 1, 5), 1, 1.0)])
-    with pytest.raises(RegistryError):
-        _join(ent, feat, time_bucketed=True)
+    with pytest.raises(RegistryError, match="requires ttl_seconds"):
+        _join(ent, feat, strategy="time_bucketed")
 
 
 def test_empty_feature_table(spark):
@@ -374,19 +383,7 @@ def test_nearest_event_join_tie_breaks_backward(spark):
 
 
 def _join_uw(ent, feat, **kw):
-    from tfx_addons_feast_examplegen_spark.operators.pit_join import (
-        point_in_time_join_union_window,
-    )
-
-    defaults = dict(
-        join_keys=["uid"],
-        entity_ts_col="ts",
-        feature_ts_col="fts",
-        features=["val"],
-        created_col="created",
-    )
-    defaults.update(kw)
-    return point_in_time_join_union_window(ent, feat, **defaults)
+    return _join(ent, feat, strategy="union_window", **kw)
 
 
 def test_union_window_edge_semantics(spark):
@@ -456,12 +453,11 @@ def test_union_window_null_key_and_duplicate_spine(spark):
     )
 
 
-def test_union_window_equivalence_on_fixture_tables(spark, sf_dir):
-    # Strategy equivalence on real data: pair+max_by vs union-window
-    # must agree row-for-row, with and without TTL, with a prefix.
-    from tfx_addons_feast_examplegen_spark.operators.pit_join import (
-        point_in_time_join_union_window,
-    )
+@pytest.mark.parametrize("strategy", ["time_bucketed", "union_window"])
+def test_strategy_equivalence_on_fixture_tables(spark, sf_dir, strategy):
+    # Strategy equivalence on real data: each strategy must agree with
+    # pair+max_by row-for-row, with and without TTL (time_bucketed needs
+    # one), with a prefix (SURVEY.md §4.2 scale techniques).
     from tfx_addons_feast_examplegen_spark.session import register_tables
 
     t = register_tables(spark, sf_dir)
@@ -471,11 +467,11 @@ def test_union_window_equivalence_on_fixture_tables(spark, sf_dir):
             (TIMESTAMP '2024-01-15 00:00:00'), (TIMESTAMP '2024-01-22 12:34:56'),
             (TIMESTAMP '2024-01-29 00:00:00')) AS v(event_timestamp)
     """)
-    for kw in (
-        {},
-        {"ttl_seconds": 7 * 24 * 3600},
-        {"output_prefix": "f_"},
-    ):
+    ttl = {"ttl_seconds": 7 * 24 * 3600}
+    variants = [ttl, {**ttl, "output_prefix": "f_"}]
+    if strategy != "time_bucketed":
+        variants.append({})
+    for kw in variants:
         base = dict(
             join_keys=["user_id"],
             entity_ts_col="event_timestamp",
@@ -484,17 +480,14 @@ def test_union_window_equivalence_on_fixture_tables(spark, sf_dir):
             created_col="event_id",
             **kw,
         )
-        v = "f_value" if kw.get("output_prefix") else "value"
-        e = "f_event_type" if kw.get("output_prefix") else "event_type"
-        a = sorted(
-            ((r.user_id, r.event_timestamp, r[v], r[e])
-             for r in point_in_time_join(spine, t["events"], **base).collect()),
-            key=str,
-        )
-        b = sorted(
-            ((r.user_id, r.event_timestamp, r[v], r[e])
-             for r in point_in_time_join_union_window(
-                 spine, t["events"], **base).collect()),
-            key=str,
-        )
-        assert a == b and len(a) > 0
+        p = kw.get("output_prefix", "")
+        got = {}
+        for strat in ("pair", strategy):
+            df = point_in_time_join(spine, t["events"], strategy=strat, **base)
+            got[strat] = sorted(
+                ((r.user_id, r.event_timestamp, r[f"{p}value"], r[f"{p}event_type"])
+                 for r in df.collect()),
+                key=str,
+            )
+        assert got["pair"] == got[strategy]
+        assert len(got["pair"]) == spine.count()

@@ -4,10 +4,14 @@ The three physical strategies (pair+max_by, time_bucketed, union_window)
 are oracle-equivalent; ``materialize_features`` must pick per the
 measured decision rule — pair for shallow history, time_bucketed for
 deep history bounded by a TTL, union_window for deep/unbounded history —
-with explicit registry pins honored and the probe cached off the query
-path. Each branch is asserted here on fixture tables, plus end-to-end
-equivalence across all three pinned strategies.
+with the probe cached off the query path and shared by every view over
+one table. Each branch is asserted here on fixture tables, plus
+equivalence across all three strategies and the strategy mix perfbench
+expects of its generated inputs.
 """
+
+import importlib.util
+import os
 
 import pytest
 
@@ -15,6 +19,7 @@ from tfx_addons_feast_examplegen_spark.operators import pit_join as pj
 from tfx_addons_feast_examplegen_spark.operators.pit_join import (
     last_strategy_choices,
     materialize_features,
+    point_in_time_join,
 )
 from tfx_addons_feast_examplegen_spark.registry import (
     FeatureView,
@@ -23,6 +28,7 @@ from tfx_addons_feast_examplegen_spark.registry import (
     testdata_registry as _testdata_registry,
 )
 from tfx_addons_feast_examplegen_spark.session import register_tables
+from tfx_addons_feast_examplegen_spark.sources.examplegen import substitute_params
 
 SPINE = """
     SELECT c_custkey AS user_id,
@@ -47,7 +53,7 @@ def _deep_view_path(spark, tmp_path, rows_per_key=200):
     return path
 
 
-def _view(path, *, ttl=None, strategy="auto"):
+def _view(path, *, ttl=None):
     return FeatureView(
         name="deep",
         path=path,
@@ -55,7 +61,6 @@ def _view(path, *, ttl=None, strategy="auto"):
         timestamp_col="ts",
         features=("score",),
         ttl_seconds=ttl,
-        strategy=strategy,
     )
 
 
@@ -103,27 +108,22 @@ def test_auto_deep_history_with_ttl_picks_time_bucketed(
     assert "__f_bucket" in plan or "floor" in plan.lower()
 
 
-def test_explicit_pin_overrides_auto(spark, sf_dir, tmp_path):
-    register_tables(spark, sf_dir)
-    path = _deep_view_path(spark, tmp_path)
-    # deep history would auto-select union_window; the pin wins
-    reg = Registry(views={"deep": _view(path, strategy="pair")})
-    _materialize(spark, reg, sf_dir).count()
-    assert last_strategy_choices() == {"deep": "pair"}
-    reg = Registry(views={"deep": _view(path, ttl=86400, strategy="union_window")})
-    _materialize(spark, reg, sf_dir).count()
-    assert last_strategy_choices() == {"deep": "union_window"}
-
-
 def test_all_strategies_equivalent_end_to_end(spark, sf_dir, tmp_path):
     register_tables(spark, sf_dir)
     path = _deep_view_path(spark, tmp_path)
+    spine = spark.sql(SPINE)
     results = {}
     for strat in ("pair", "time_bucketed", "union_window"):
-        reg = Registry(
-            views={"deep": _view(path, ttl=30 * 86400, strategy=strat)}
-        )
-        rows = _materialize(spark, reg, sf_dir).collect()
+        rows = point_in_time_join(
+            spine,
+            spark.read.parquet(path),
+            join_keys=["user_id"],
+            entity_ts_col="event_timestamp",
+            feature_ts_col="ts",
+            features=["score"],
+            ttl_seconds=30 * 86400,
+            strategy=strat,
+        ).collect()
         results[strat] = sorted(
             (r.user_id, r.event_timestamp, r.score) for r in rows
         )
@@ -131,11 +131,13 @@ def test_all_strategies_equivalent_end_to_end(spark, sf_dir, tmp_path):
 
 
 def test_probe_is_cached_per_view(spark, sf_dir, tmp_path):
+    # The cache key is the table (resolved path) plus the entity columns
+    # the probe groups on, so every view over one table shares it.
     register_tables(spark, sf_dir)
     path = _deep_view_path(spark, tmp_path)
     reg = Registry(views={"deep": _view(path)})
     _materialize(spark, reg, sf_dir).count()
-    key = ("deep", path)
+    key = (path, ("user_id",))
     assert pj._DEPTH_CACHE[key] == 200
     # poison the cache: a second materialize must NOT re-probe
     pj._DEPTH_CACHE[key] = 1
@@ -145,25 +147,103 @@ def test_probe_is_cached_per_view(spark, sf_dir, tmp_path):
     del pj._DEPTH_CACHE[key]
 
 
-def test_invalid_strategy_rejected():
-    with pytest.raises(RegistryError, match="unknown join strategy"):
-        _view("x.parquet", strategy="sortmerge")
+def _job_stages(spark, group, fn):
+    """Run ``fn`` under a job group; the first stage name of each job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    return [
+        st.getStageInfo(min(st.getJobInfo(j).stageIds)).name
+        for j in st.getJobIdsForGroup(group)
+    ]
 
 
-def test_time_bucketed_pin_requires_ttl():
-    with pytest.raises(RegistryError, match="requires"):
-        _view("x.parquet", ttl=None, strategy="time_bucketed")
-
-
-def test_strategy_round_trips_through_yaml(tmp_path):
-    reg = Registry(
-        views={"deep": _view("x.parquet", ttl=60, strategy="union_window")}
+def test_views_over_one_table_share_read_and_probe(spark, sf_dir, tmp_path):
+    # Two temporal views over one parquet file: one schema-inference job
+    # and one depth probe on the cold call, one read job on the warm one.
+    register_tables(spark, sf_dir)
+    path = _deep_view_path(spark, tmp_path)
+    deep_7d = FeatureView(
+        name="deep_7d",
+        path=path,
+        entities=("user_id",),
+        timestamp_col="ts",
+        features=("score_7d",),
+        ttl_seconds=7 * 86400,
+        field_mapping={"score": "score_7d"},
     )
-    reloaded = Registry.from_yaml(reg.to_yaml())
-    assert reloaded.views["deep"].strategy == "union_window"
-    # default stays auto when the field is absent (older configs)
-    legacy = Registry.from_yaml(
-        '{"views": [{"name": "v", "path": "p", "entities": ["k"],'
-        ' "timestamp_col": "ts", "features": ["f"]}]}'
+    reg = Registry(views={"deep": _view(path), "deep_7d": deep_7d})
+    both = ["deep:score", "deep_7d:score_7d"]
+
+    def plan(features):
+        return lambda: _materialize(spark, reg, sf_dir, features)
+
+    cold = _job_stages(spark, "pit-share-cold", plan(both))
+    assert last_strategy_choices() == {
+        "deep": "union_window", "deep_7d": "time_bucketed",
+    }
+    reads = [n for n in cold if n.startswith("parquet at")]
+    probes = [n for n in cold if n.startswith("first at")]
+    assert len(reads) == 1 and len(reads) + len(probes) == len(cold), cold
+    # one probe: exactly the jobs a single view's cold call launches
+    del pj._DEPTH_CACHE[(path, ("user_id",))]
+    single = _job_stages(spark, "pit-share-single", plan(["deep:score"]))
+    assert probes and len(probes) == len(single) - 1, (cold, single)
+
+    warm = _job_stages(spark, "pit-share-warm", plan(both))
+    assert len(warm) == 1 and warm[0].startswith("parquet at"), warm
+    del pj._DEPTH_CACHE[(path, ("user_id",))]
+
+
+def test_invalid_strategy_rejected(spark):
+    feat = spark.createDataFrame(
+        [(1, None, 1.0)], "user_id long, ts timestamp, score double"
     )
-    assert legacy.views["v"].strategy == "auto"
+    with pytest.raises(RegistryError, match="unknown join strategy 'sortmerge'"):
+        point_in_time_join(
+            feat,
+            feat,
+            join_keys=["user_id"],
+            entity_ts_col="ts",
+            feature_ts_col="ts",
+            features=["score"],
+            strategy="sortmerge",
+        )
+
+
+def _perfbench_workloads():
+    """perfbench/workloads.py, loaded from its file (not a package)."""
+    path = os.path.join(
+        os.path.dirname(__file__), os.pardir, "perfbench", "workloads.py"
+    )
+    spec = importlib.util.spec_from_file_location("perfbench_workloads", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_perfbench_inputs_resolve_to_expected_strategies(spark, sf_dir, tmp_path):
+    # perfbench fails every run whose strategy mix differs from the one
+    # its workloads declare; a change to the rule or the probe shows here
+    # first, on the generated inputs at their self-test size.
+    wl = _perfbench_workloads()
+    sql = substitute_params(wl.ENTITY_SQL, wl.RANGE_PARAMS)
+    try:
+        for w in wl.WORKLOADS.values():
+            inputs = wl.materialize(str(tmp_path), w.family, "tiny", 1)
+            register_tables(spark, inputs)
+            materialize_features(
+                spark,
+                entity_query=sql,
+                features="training",
+                registry=Registry.from_yaml(wl.registry_yaml(w.family)),
+                sf_dir=inputs,
+            )
+            assert last_strategy_choices() == w.expected_strategies, w.name
+    finally:
+        register_tables(spark, sf_dir)

@@ -253,6 +253,9 @@ def test_partitioned_tfrecords_streams_large_partition(spark, tmp_path):
 
 
 def test_param_substitution_quotes_strings():
+    from decimal import Decimal
+
+    from tfx_addons_feast_examplegen_spark.registry import RegistryError
     from tfx_addons_feast_examplegen_spark.sources.examplegen import (
         substitute_params,
     )
@@ -286,6 +289,16 @@ def test_param_substitution_quotes_strings():
         )
         == "SELECT '@v', 'it''s @v', 'a\\'@v', \"@v\", `@v` FROM t WHERE x = 2"
     )
+    # numbers verbatim, booleans as SQL keywords, dates as DATE literals
+    assert substitute_params(
+        "@b @f @d @day", {"b": True, "f": 0.25, "d": Decimal("1.50"),
+                          "day": dt.date(2024, 1, 15)},
+    ) == "TRUE 0.25 1.50 DATE '2024-01-15'"
+    # a value with no SQL literal form fails naming the bound parameter
+    for bad in ([1, 2], {"a": 1}, b"x", float("nan"), float("inf"),
+                Decimal("NaN"), object()):
+        with pytest.raises(RegistryError, match="parameter @begin_ts: "):
+            substitute_params("@begin_ts, @begin_tsx", {"begin_ts": bad})
 
 
 def test_unknown_format_rejected(spark, sf_dir):

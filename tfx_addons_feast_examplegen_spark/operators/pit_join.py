@@ -40,10 +40,13 @@ Spark-first design decisions (scale rationale):
   reused by the following aggregate (Catalyst sees matching partitioning),
   so it costs one shuffle, not two.
 - **Equi-conjuncts drive the shuffle; the time predicate stays a post-join
-  filter** inside the sort-merge/shuffled-hash join. For very hot entities
-  at extreme scale, callers can pre-bucket time (``time_bucket`` option)
-  to turn the range predicate into an additional equi key — a standard
-  interval-join technique (see SURVEY.md §4.2).
+  filter** inside the sort-merge/shuffled-hash join. For deep per-key
+  history the latest-wins step changes shape, not result:
+  ``strategy="time_bucketed"`` turns a TTL-bounded range predicate into an
+  additional equi key (a standard interval-join technique, SURVEY.md
+  §4.2) and ``strategy="union_window"`` replaces pair enumeration with one
+  sorted running frame. :func:`materialize_features` picks the strategy
+  per view from a cached per-table depth probe.
 - Small feature views broadcast automatically (AQE); no hints needed.
 """
 
@@ -53,25 +56,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import Registry, RegistryError
+from ..session import normalize_timestamps
 
-
-def _apply_field_mapping(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """View-level source-column -> feature-name renames (SURVEY.md P3)."""
-    for src, dst in mapping.items():
-        df = df.withColumnRenamed(src, dst)
-    return df
-
-
-def _normalize_ts(df: DataFrame, ts_col: str) -> DataFrame:
-    """Coerce an int64-nanos event-time column to TimestampType.
-
-    Parquet TIMESTAMP(NANOS) surfaces as long under
-    ``spark.sql.legacy.parquet.nanosAsLong``; the registry declares which
-    column is event time, so the coercion is schema-driven, not guessed.
-    """
-    if ts_col and dict(df.dtypes).get(ts_col) == "bigint":
-        df = df.withColumn(ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000")))
-    return df
+_STRATEGIES = ("pair", "time_bucketed", "union_window")
 
 
 def point_in_time_join(
@@ -85,7 +72,7 @@ def point_in_time_join(
     created_col: str | None = None,
     ttl_seconds: int | None = None,
     output_prefix: str = "",
-    time_bucketed: bool = False,
+    strategy: str = "pair",
     spine_source: DataFrame | None = None,
 ) -> DataFrame:
     """As-of join one feature table onto an entity spine (J1-J4, J6).
@@ -96,26 +83,33 @@ def point_in_time_join(
     ties broken by newest ``created_col``. Entities with no candidate keep
     their row with NULL features (left-outer semantics).
 
-    ``time_bucketed=True`` (requires a TTL) adds ``floor(ts / ttl)`` as an
-    extra equi-join key: each feature row lands in one bucket, each entity
-    probes its own bucket and the previous one (covering the full
-    ``[ts-ttl, ts]`` interval), and the original range predicate still
-    filters inside the match. This is the 100 TB interval-join technique
-    (SURVEY.md §4.2): a hot entity key with years of history no longer
-    pairs every entity row with every historical feature row — candidates
-    are bounded by two TTL windows regardless of history depth. Cost: the
-    entity side duplicates 2× before the shuffle. Results are identical
-    to the unbucketed join (equivalence is test-enforced).
+    ``strategy`` picks the physical shape of the one step that finds the
+    newest feature payload per distinct (keys, ts) spine row; results are
+    identical under all three (equivalence is test-enforced):
 
-    Measured (scripts/scale_experiment.py, local[32], ttl=7d, 10% of
-    events on one hot key): 10M events / 10k users / 36 snapshots —
-    plain 8.7s vs bucketed 5.1s (1.7×); 50M events / 100k users / 24
-    snapshots (5M-event hot key) — plain 75.4s vs bucketed 17.3s
-    (4.4×). The gap grows with history depth since plain candidates
-    scale with full per-key history while bucketed candidates are capped
-    at two TTL windows. With shallow history (≲100 events/key) the
-    bucket arithmetic and 2× probe overhead make the plain join
-    marginally faster — choose per table.
+    - ``"pair"``: key-equal candidate pairs filtered by the as-of range,
+      then a ``max_by`` dedup. Cheapest with shallow per-key history.
+    - ``"time_bucketed"`` (requires a TTL): ``floor(ts / ttl)`` becomes an
+      extra equi-join key. Each feature row lands in one bucket, each
+      entity probes its own bucket and the previous one (covering the
+      full ``[ts-ttl, ts]`` interval), and the range predicate still
+      filters inside the match, so a hot key with years of history pairs
+      each entity row with at most two TTL windows of it (SURVEY.md
+      §4.2). Cost: the entity side duplicates 2x before the shuffle.
+      Measured (scripts/scale_experiment.py, local[32], ttl=7d, 10% of
+      events on one hot key): 10M events / 10k users / 36 snapshots —
+      pair 8.7s vs bucketed 5.1s (1.7x); 50M events / 100k users / 24
+      snapshots (5M-event hot key) — pair 75.4s vs bucketed 17.3s (4.4x).
+      With shallow history (≲100 events/key) pair is marginally faster.
+    - ``"union_window"``: linear per-key cost, no TTL needed. Pair
+      enumeration is O(spine_k x features_k) per key k — quadratic on a
+      hot key, and invisible to AQE's skew mitigation, which triggers on
+      partition BYTES (measured: 1% hot key, 10M x 2M rows -> 30x wall
+      blowup that neither default nor aggressively-tuned AQE touches;
+      scripts/scale_probe_pit_skew.py). This shape unions both sides
+      into one (key, ts)-sorted stream and carries the newest feature
+      payload onto each spine row with a running ``last(ignorenulls)``
+      frame; see :func:`_union_window_latest`.
 
     ``spine_source`` (default ``entity_df``) is the frame the distinct
     (keys, ts) spine and candidate set are computed from. When chaining
@@ -132,8 +126,16 @@ def point_in_time_join(
     """
     if not features:
         raise RegistryError("point_in_time_join: empty feature list")
-    if time_bucketed and not ttl_seconds:
-        raise RegistryError("time_bucketed requires ttl_seconds")
+    if strategy not in _STRATEGIES:
+        raise RegistryError(
+            f"point_in_time_join: unknown join strategy {strategy!r} "
+            "(expected pair | time_bucketed | union_window)"
+        )
+    if strategy == "time_bucketed" and not ttl_seconds:
+        raise RegistryError(
+            "point_in_time_join: strategy 'time_bucketed' requires "
+            "ttl_seconds (the bucket width is the TTL)"
+        )
 
     # Distinct (keys, ts) spine: the reference's synthesized row id is
     # concat(keys, ts), so this is the same grain. Helper names are unique
@@ -141,7 +143,6 @@ def point_in_time_join(
     # (avoids self-join attribute ambiguity — the spine derives from
     # entity_df).
     base = spine_source if spine_source is not None else entity_df
-    ent_ts = F.col("__ent_ts")
     spine = (
         base.select(
             *[F.col(k).alias(f"__ek_{k}") for k in join_keys],
@@ -149,16 +150,52 @@ def point_in_time_join(
         )
         .distinct()
     )
+    kw = dict(join_keys=join_keys, feature_ts_col=feature_ts_col, features=features,
+              created_col=created_col, ttl_seconds=ttl_seconds)
+    if strategy == "union_window":
+        latest = _union_window_latest(spine, feature_df, **kw)
+    else:
+        latest = _pair_latest(
+            spine, feature_df, bucketed=(strategy == "time_bucketed"), **kw
+        )
+    latest = latest.select(
+        *[F.col(f"__ek_{k}") for k in join_keys],
+        F.col("__ent_ts"),
+        *[F.col(f"__payload.`{f}`").alias(f"{output_prefix}{f}") for f in features],
+    )
 
+    join_cond = None
+    for k in join_keys:
+        c = entity_df[k] == F.col(f"__ek_{k}")
+        join_cond = c if join_cond is None else (join_cond & c)
+    join_cond = join_cond & (entity_df[entity_ts_col] == F.col("__ent_ts"))
+
+    helper_cols = [f"__ek_{k}" for k in join_keys] + ["__ent_ts"]
+    return entity_df.join(latest, join_cond, "left").drop(*helper_cols)
+
+
+def _pair_latest(
+    spine: DataFrame,
+    feature_df: DataFrame,
+    *,
+    join_keys: list[str],
+    feature_ts_col: str,
+    features: list[str],
+    created_col: str | None,
+    ttl_seconds: int | None,
+    bucketed: bool,
+) -> DataFrame:
+    """Newest payload per spine row from key-equal candidate pairs
+    (``pair``; ``time_bucketed`` when ``bucketed``)."""
+    ent_ts = F.col("__ent_ts")
     feat_cols: list[Column] = [F.col(k).alias(f"__fk_{k}") for k in join_keys]
     feat_cols.append(F.col(feature_ts_col).alias("__f_ts"))
     if created_col:
         feat_cols.append(F.col(created_col).alias("__f_created"))
-    out_names = {f: f"{output_prefix}{f}" for f in features}
     feat_cols.extend(F.col(f).alias(f"__fv_{f}") for f in features)
     feat = feature_df.select(*feat_cols)
 
-    if time_bucketed:
+    if bucketed:
         # One bucket per feature row; entity probes bucket(ts) and
         # bucket(ts)-1 (posexplode of the two offsets) so every feature
         # in [ts-ttl, ts] shares a bucket with the probe.
@@ -166,20 +203,14 @@ def point_in_time_join(
             F.unix_timestamp(ts_col) / F.lit(int(ttl_seconds))
         ).cast("long")
         feat = feat.withColumn("__f_bucket", bucket(F.col("__f_ts")))
-        spine = spine.select(
-            "*",
-            F.explode(
-                F.array(
-                    bucket(ent_ts), bucket(ent_ts) - F.lit(1)
-                )
-            ).alias("__e_bucket"),
-        )
+        probes = F.array(bucket(ent_ts), bucket(ent_ts) - F.lit(1))
+        spine = spine.select("*", F.explode(probes).alias("__e_bucket"))
 
     cond = None
     for k in join_keys:
         c = F.col(f"__ek_{k}") == F.col(f"__fk_{k}")
         cond = c if cond is None else (cond & c)
-    if time_bucketed:
+    if bucketed:
         cond = cond & (F.col("__e_bucket") == F.col("__f_bucket"))
     time_cond = F.col("__f_ts") <= ent_ts
     if ttl_seconds:
@@ -190,7 +221,7 @@ def point_in_time_join(
     cond = cond & time_cond
 
     candidates = spine.join(feat, cond, "inner")
-    if time_bucketed:
+    if bucketed:
         # A feature row can match the same (entity, ts) through both
         # probed buckets only if buckets collide — impossible (one bucket
         # per feature row), so no dedup needed; drop the helper column.
@@ -203,24 +234,95 @@ def point_in_time_join(
         else F.struct(F.col("__f_ts"))
     )
     payload = F.struct(*[F.col(f"__fv_{f}").alias(f) for f in features])
-    latest = (
-        candidates.groupBy(*[F.col(f"__ek_{k}") for k in join_keys], F.col("__ent_ts"))
-        .agg(F.max_by(payload, ordering).alias("__payload"))
-        .select(
-            *[F.col(f"__ek_{k}") for k in join_keys],
-            F.col("__ent_ts"),
-            *[F.col(f"__payload.{f}").alias(out_names[f]) for f in features],
-        )
+    return candidates.groupBy(
+        *[F.col(f"__ek_{k}") for k in join_keys], F.col("__ent_ts")
+    ).agg(F.max_by(payload, ordering).alias("__payload"))
+
+
+def _union_window_latest(
+    spine: DataFrame,
+    feature_df: DataFrame,
+    *,
+    join_keys: list[str],
+    feature_ts_col: str,
+    features: list[str],
+    created_col: str | None,
+    ttl_seconds: int | None,
+) -> DataFrame:
+    """Newest payload per spine row from one sorted stream (``union_window``).
+
+    Never materializes pairs. Both sides are unioned into one (key,
+    ts)-sorted stream — feature rows ordered before spine rows at equal
+    ts so the as-of predicate stays inclusive, and by (ts, created) among
+    themselves so the running winner IS the ``max_by(payload, struct(ts,
+    created))`` winner — and a running ``last(..., ignorenulls)`` over
+    ROWS UNBOUNDED PRECEDING carries the newest feature payload onto each
+    spine row: O(n log n) sort per key, O(n) frame evaluation (Spark's
+    UnboundedPreceding frame keeps a running value; no per-row rescan).
+    A TTL filters the carried payload afterwards — if the newest as-of
+    feature row is older than the bound, every other candidate is too,
+    so post-filtering is exactly the candidate-side interval predicate.
+    """
+    ordering = (
+        F.struct(F.col(feature_ts_col), F.col(created_col))
+        if created_col
+        else F.struct(F.col(feature_ts_col))
+    )
+    payload = F.struct(
+        F.col(feature_ts_col).alias("__f_ts"),
+        *[F.col(f).alias(f) for f in features],
+    )
+    # Null join keys never match under equi-join semantics: drop them
+    # from the stream (partitionBy would otherwise group NULLs together
+    # and leak features across "equal" null keys). Spine rows with null
+    # keys still survive via the final left join. A feature row with a
+    # null event time never satisfies `feature.ts <= entity.ts` either
+    # (it would sort first and be carried), so it goes too.
+    def _non_null(df: DataFrame, cols: list[str]) -> DataFrame:
+        cond = None
+        for c in cols:
+            k = F.col(c).isNotNull()
+            cond = k if cond is None else (cond & k)
+        return df.filter(cond)
+
+    feat_stream = _non_null(feature_df, [*join_keys, feature_ts_col]).select(
+        *[F.col(k).alias(f"__ek_{k}") for k in join_keys],
+        F.col(feature_ts_col).alias("__ts"),
+        F.lit(0).alias("__is_spine"),
+        ordering.alias("__ord"),
+        payload.alias("__payload"),
+    )
+    spine_stream = _non_null(spine, [f"__ek_{k}" for k in join_keys]).select(
+        *[F.col(f"__ek_{k}") for k in join_keys],
+        F.col("__ent_ts").alias("__ts"),
+        F.lit(1).alias("__is_spine"),
+        F.lit(None).cast(feat_stream.schema["__ord"].dataType).alias("__ord"),
+        F.lit(None).cast(feat_stream.schema["__payload"].dataType).alias(
+            "__payload"
+        ),
     )
 
-    join_cond = None
-    for k in join_keys:
-        c = entity_df[k] == F.col(f"__ek_{k}")
-        join_cond = c if join_cond is None else (join_cond & c)
-    join_cond = join_cond & (entity_df[entity_ts_col] == F.col("__ent_ts"))
-
-    helper_cols = [f"__ek_{k}" for k in join_keys] + ["__ent_ts"]
-    return entity_df.join(latest, join_cond, "left").drop(*helper_cols)
+    w = (
+        Window.partitionBy(*[F.col(f"__ek_{k}") for k in join_keys])
+        .orderBy(F.col("__ts"), F.col("__is_spine"), F.col("__ord"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    carried = (
+        feat_stream.unionByName(spine_stream)
+        .withColumn("__carry", F.last("__payload", ignorenulls=True).over(w))
+        .filter(F.col("__is_spine") == 1)
+    )
+    if ttl_seconds:
+        lower = F.col("__ts") - F.expr(f"INTERVAL {int(ttl_seconds)} SECOND")
+        carried = carried.withColumn(
+            "__carry",
+            F.when(F.col("__carry.__f_ts") >= lower, F.col("__carry")),
+        )
+    return carried.select(
+        *[F.col(f"__ek_{k}") for k in join_keys],
+        F.col("__ts").alias("__ent_ts"),
+        F.col("__carry").alias("__payload"),
+    )
 
 
 def _static_join(
@@ -274,16 +376,17 @@ def _static_join(
 #   cost; the 30x hot-key cliff AQE cannot see, restored to 1.0x).
 #
 # The probe is a bounded, cached, feature-side stat: max per-key row count
-# within the first _AUTO_PROBE_ROWS rows, computed once per (view, path)
-# per process and NEVER re-run on the query path. It deliberately reads a
-# row-limited prefix rather than sample() — deterministic, one-job, and
-# at 100 TB it touches a handful of input splits instead of scanning the
-# table. SPINE-side skew is per-query and invisible to a registry-time
-# stat: callers with a hot spine key pin strategy="union_window" on the
-# view (see scripts/scale_probe_pit_skew.py for when that matters).
+# within the first _AUTO_PROBE_ROWS rows, computed once per (table path,
+# entity columns) per process and NEVER re-run on the query path, so views
+# over one table share it. It deliberately reads a row-limited prefix
+# rather than sample() — deterministic, one-job, and at 100 TB it touches
+# a handful of input splits instead of scanning the table. SPINE-side skew
+# is per-query and invisible to a table-side stat: callers with a hot
+# spine key call point_in_time_join(strategy="union_window") themselves
+# (see scripts/scale_probe_pit_skew.py for when that matters).
 _AUTO_PROBE_ROWS = 100_000
 _AUTO_DEPTH_THRESHOLD = 128
-_DEPTH_CACHE: dict[tuple[str, str], int] = {}
+_DEPTH_CACHE: dict[tuple[str, tuple[str, ...]], int] = {}
 
 # view name -> strategy chosen by the most recent materialize_features
 # call in this process; read by tests and scripts/dump_plans.py so every
@@ -296,8 +399,10 @@ def last_strategy_choices() -> dict[str, str]:
     return dict(_LAST_STRATEGY_CHOICES)
 
 
-def _probe_max_key_depth(fdf: DataFrame, keys: list[str], cache_key: tuple[str, str]) -> int:
-    if cache_key not in _DEPTH_CACHE:
+def _select_strategy(view, fdf: DataFrame, path: str) -> str:
+    """The decision rule above, on the cached per-table depth probe."""
+    keys = tuple(view.entities)
+    if (path, keys) not in _DEPTH_CACHE:
         row = (
             fdf.select(*keys)
             .limit(_AUTO_PROBE_ROWS)
@@ -306,20 +411,28 @@ def _probe_max_key_depth(fdf: DataFrame, keys: list[str], cache_key: tuple[str, 
             .agg(F.max("count").alias("d"))
             .first()
         )
-        _DEPTH_CACHE[cache_key] = int(row["d"] or 0)
-    return _DEPTH_CACHE[cache_key]
-
-
-def _select_strategy(view, fdf: DataFrame, sf_dir: str) -> str:
-    """Resolve a view's as-of strategy (explicit pin or the auto rule)."""
-    if view.strategy != "auto":
-        return view.strategy
-    depth = _probe_max_key_depth(
-        fdf, list(view.entities), (view.name, view.resolve_path(sf_dir))
-    )
-    if depth > _AUTO_DEPTH_THRESHOLD:
+        _DEPTH_CACHE[(path, keys)] = int(row["d"] or 0)
+    if _DEPTH_CACHE[(path, keys)] > _AUTO_DEPTH_THRESHOLD:
         return "time_bucketed" if view.ttl_seconds else "union_window"
     return "pair"
+
+
+def _check_output_names(
+    entity_cols: list[str], resolved: dict[str, list[str]], full_feature_names: bool
+) -> None:
+    """Fail on an output column two sources would both produce (Feast's
+    ``FeatureNameCollisionError``); case-insensitive, as Spark resolves."""
+    sources = {c.lower(): (c, "the entity query") for c in entity_cols}
+    for view_name, feats in resolved.items():
+        for name in (f"{view_name}__{f}" if full_feature_names else f for f in feats):
+            if name.lower() in sources:
+                other, src = sources[name.lower()]
+                raise RegistryError(
+                    f"output column {name!r} of view {view_name!r} collides with "
+                    f"column {other!r} of {src}; set full_feature_names=True or "
+                    "rename the feature with the view's field_mapping"
+                )
+            sources[name.lower()] = (name, f"view {view_name!r}")
 
 
 def materialize_features(
@@ -340,14 +453,15 @@ def materialize_features(
     one as-of join per referenced view onto the spine (J5 multi-view
     composition — each view deduped independently, all LEFT onto the
     spine). ``full_feature_names=True`` prefixes outputs ``view__feature``
-    (Feast's naming option; default unprefixed like the reference).
+    (Feast's naming option; default unprefixed like the reference). Two
+    sources producing one output column raise :class:`RegistryError`.
 
-    Each view's physical as-of strategy is resolved per its registry
-    ``strategy`` field: ``auto`` (default) applies the measured decision
-    rule above :func:`_select_strategy` using a cached bounded per-key
-    depth probe; explicit ``pair`` / ``time_bucketed`` /
-    ``union_window`` pin the shape (all three are oracle-equivalent —
-    only the plan differs). The per-view choice is recorded in
+    Each distinct feature table (format, resolved path) is read once per
+    call and shared by every view over it. Each view's physical as-of
+    strategy comes from the measured decision rule above
+    :func:`_select_strategy`, on a depth probe cached per (table, entity
+    columns); all three strategies are oracle-equivalent — only the plan
+    differs. The per-view choice is recorded in
     :func:`last_strategy_choices` so plan dumps show which shape ran.
     """
     resolved = registry.resolve_features(features)
@@ -360,13 +474,17 @@ def materialize_features(
         raise RegistryError(
             f"entity query result lacks timestamp column {entity_ts_col!r}"
         )
+    _check_output_names(entity_df.columns, resolved, full_feature_names)
 
+    tables: dict[tuple[str, str], DataFrame] = {}
     out = entity_df
     for view_name, feats in resolved.items():
         view = registry.views[view_name]
-        fdf = view.read(spark, sf_dir)
-        fdf = _apply_field_mapping(fdf, view.field_mapping)
-        fdf = _normalize_ts(fdf, view.timestamp_col)
+        path = view.resolve_path(sf_dir)
+        if (view.format, path) not in tables:
+            tables[(view.format, path)] = view.read(spark, sf_dir)
+        fdf = tables[(view.format, path)].withColumnsRenamed(view.field_mapping)
+        fdf = normalize_timestamps(fdf, (view.timestamp_col,))
         prefix = f"{view_name}__" if full_feature_names else ""
         missing = [k for k in view.entities if k not in out.columns]
         if missing:
@@ -382,9 +500,11 @@ def materialize_features(
             # time — linear in the number of views instead of doubling
             # per level (see point_in_time_join docstring).
             from_base = all(k in entity_df.columns for k in view.entities)
-            strategy = _select_strategy(view, fdf, sf_dir)
+            strategy = _select_strategy(view, fdf, path)
             _LAST_STRATEGY_CHOICES[view_name] = strategy
-            kw = dict(
+            out = point_in_time_join(
+                out,
+                fdf,
                 join_keys=list(view.entities),
                 entity_ts_col=entity_ts_col,
                 feature_ts_col=view.timestamp_col,
@@ -392,14 +512,9 @@ def materialize_features(
                 created_col=view.created_col,
                 ttl_seconds=view.ttl_seconds,
                 output_prefix=prefix,
+                strategy=strategy,
                 spine_source=entity_df if from_base else None,
             )
-            if strategy == "union_window":
-                out = point_in_time_join_union_window(out, fdf, **kw)
-            else:
-                out = point_in_time_join(
-                    out, fdf, time_bucketed=(strategy == "time_bucketed"), **kw
-                )
         else:
             out = _static_join(
                 out,
@@ -479,137 +594,3 @@ def nearest_event_join(
         )
     )
     return entity_df.join(best, [*join_keys, entity_ts_col], "left")
-
-
-def point_in_time_join_union_window(
-    entity_df: DataFrame,
-    feature_df: DataFrame,
-    *,
-    join_keys: list[str],
-    entity_ts_col: str,
-    feature_ts_col: str,
-    features: list[str],
-    created_col: str | None = None,
-    ttl_seconds: int | None = None,
-    output_prefix: str = "",
-    spine_source: DataFrame | None = None,
-) -> DataFrame:
-    """As-of join with LINEAR per-key cost: the union-window strategy.
-
-    Same contract as :func:`point_in_time_join` (J1/J2/J3/J6 —
-    equivalence is test-enforced), different physical shape. The
-    default strategy enumerates every key-equal (spine row, feature
-    row) candidate pair before its ``max_by`` dedup, which is
-    O(spine_k x features_k) per key k — quadratic on a hot key, and
-    invisible to AQE's skew mitigation because ``OptimizeSkewedJoin``
-    triggers on partition BYTES while a hot key's partition can be
-    tiny in bytes and quadratic in compute (measured: 1% hot key,
-    10M x 2M rows -> 30x wall blowup that neither default nor
-    aggressively-tuned AQE touches; scripts/scale_probe_pit_skew.py).
-
-    This strategy never materializes pairs. Both sides are unioned into
-    one (key, ts)-sorted stream — feature rows ordered before spine
-    rows at equal ts so the as-of predicate stays inclusive, and by
-    (ts, created) among themselves so the running winner IS the
-    ``max_by(payload, struct(ts, created))`` winner — and a running
-    ``last(..., ignorenulls)`` over ROWS UNBOUNDED PRECEDING carries
-    the newest feature payload onto each spine row: O(n log n) sort per
-    key, O(n) frame evaluation (Spark's UnboundedPreceding frame keeps
-    a running value; no per-row rescan). A TTL filters the carried
-    payload afterwards — if the newest as-of feature row is older than
-    the bound, every other candidate is too, so post-filtering is
-    exactly the candidate-side interval predicate.
-
-    Trade-off at 100 TB: one shuffle + sort of features+spine vs the
-    default's shuffle of map-side-combined candidate winners. With
-    shallow per-key history the default moves less data; with deep or
-    skewed history the union-window's linear per-key cost wins by
-    orders of magnitude. ``time_bucketed=True`` remains the choice
-    when a TTL allows hash-partitioning the history itself; this
-    strategy needs no TTL at all (the unbounded-history hot-key case
-    nothing else covers).
-    """
-    if not features:
-        raise RegistryError("point_in_time_join_union_window: empty feature list")
-
-    # Same flat-plan chaining hook as point_in_time_join: derive the
-    # distinct spine from the ORIGINAL entity frame when chaining views
-    # so the logical tree stays linear in view count.
-    base = spine_source if spine_source is not None else entity_df
-    spine = (
-        base.select(
-            *[F.col(k).alias(f"__ek_{k}") for k in join_keys],
-            F.col(entity_ts_col).alias("__ent_ts"),
-        )
-        .distinct()
-    )
-
-    ordering = (
-        F.struct(F.col(feature_ts_col), F.col(created_col))
-        if created_col
-        else F.struct(F.col(feature_ts_col))
-    )
-    payload = F.struct(
-        F.col(feature_ts_col).alias("__f_ts"),
-        *[F.col(f).alias(f) for f in features],
-    )
-    # Null join keys never match under equi-join semantics: drop them
-    # from the stream (partitionBy would otherwise group NULLs together
-    # and leak features across "equal" null keys). Spine rows with null
-    # keys still survive via the final left join. A feature row with a
-    # null event time never satisfies `feature.ts <= entity.ts` either
-    # (it would sort first and be carried), so it goes too.
-    def _non_null(df: DataFrame, cols: list[str]) -> DataFrame:
-        cond = None
-        for c in cols:
-            k = F.col(c).isNotNull()
-            cond = k if cond is None else (cond & k)
-        return df.filter(cond)
-
-    feat_stream = _non_null(feature_df, [*join_keys, feature_ts_col]).select(
-        *[F.col(k).alias(f"__ek_{k}") for k in join_keys],
-        F.col(feature_ts_col).alias("__ts"),
-        F.lit(0).alias("__is_spine"),
-        ordering.alias("__ord"),
-        payload.alias("__payload"),
-    )
-    spine_stream = _non_null(spine, [f"__ek_{k}" for k in join_keys]).select(
-        *[F.col(f"__ek_{k}") for k in join_keys],
-        F.col("__ent_ts").alias("__ts"),
-        F.lit(1).alias("__is_spine"),
-        F.lit(None).cast(feat_stream.schema["__ord"].dataType).alias("__ord"),
-        F.lit(None).cast(feat_stream.schema["__payload"].dataType).alias(
-            "__payload"
-        ),
-    )
-
-    w = (
-        Window.partitionBy(*[F.col(f"__ek_{k}") for k in join_keys])
-        .orderBy(F.col("__ts"), F.col("__is_spine"), F.col("__ord"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = (
-        feat_stream.unionByName(spine_stream)
-        .withColumn("__carry", F.last("__payload", ignorenulls=True).over(w))
-        .filter(F.col("__is_spine") == 1)
-    )
-    if ttl_seconds:
-        lower = F.col("__ts") - F.expr(f"INTERVAL {int(ttl_seconds)} SECOND")
-        carried = carried.withColumn(
-            "__carry",
-            F.when(F.col("__carry.__f_ts") >= lower, F.col("__carry")),
-        )
-    out_names = {f: f"{output_prefix}{f}" for f in features}
-    latest = carried.select(
-        *[F.col(f"__ek_{k}") for k in join_keys],
-        F.col("__ts").alias("__ent_ts"),
-        *[F.col(f"__carry.{f}").alias(out_names[f]) for f in features],
-    )
-
-    join_cond = None
-    for k in join_keys:
-        c = entity_df[k] == F.col(f"__ek_{k}")
-        join_cond = c if join_cond is None else (join_cond & c)
-    join_cond = join_cond & (entity_df[entity_ts_col] == F.col("__ent_ts"))
-    helper_cols = [f"__ek_{k}" for k in join_keys] + ["__ent_ts"]
-    return entity_df.join(latest, join_cond, "left").drop(*helper_cols)

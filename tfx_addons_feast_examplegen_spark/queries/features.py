@@ -94,7 +94,7 @@ def _q_pit_join_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pit_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The 100 TB scale path (time_bucketed=True) against the SAME oracle
+    # The 100 TB scale path (strategy="time_bucketed") against the SAME oracle
     # as the plain TTL join — result equivalence is part of the contract.
     from ..operators.pit_join import point_in_time_join
 
@@ -109,7 +109,7 @@ def _q_pit_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         features=["value", "event_type"],
         created_col="event_id",
         ttl_seconds=7 * 24 * 3600,
-        time_bucketed=True,
+        strategy="time_bucketed",
     )
     return out.select(
         F.col("user_id"),
@@ -125,11 +125,11 @@ def _q_pit_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # part of the contract. No TTL: this is the unbounded-history case
     # neither time_bucketed (needs a TTL) nor AQE (byte-based skew
     # detection) covers; see scripts/scale_probe_pit_skew.py.
-    from ..operators.pit_join import point_in_time_join_union_window
+    from ..operators.pit_join import point_in_time_join
 
     t = register_tables(spark, sf_dir)
     spine = spark.sql(_SPINE_SQL)
-    out = point_in_time_join_union_window(
+    out = point_in_time_join(
         spine,
         t["events"],
         join_keys=["user_id"],
@@ -137,6 +137,7 @@ def _q_pit_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         feature_ts_col="ts",
         features=["value", "event_type"],
         created_col="event_id",
+        strategy="union_window",
     )
     return out.select(
         F.col("user_id"),

@@ -48,6 +48,11 @@ class FeatureView:
     (``executor.py:87`` [delegated]): entity join keys, event/created
     timestamp columns, TTL seconds (0/None = unbounded), and an optional
     source-column -> feature-name rename map (``field_mapping``).
+
+    A view does not choose its physical as-of join: ``materialize_features``
+    picks pair, time_bucketed or union_window from the table's per-key
+    history depth and the view's TTL (``operators/pit_join.py``). Views
+    sharing one table share its read and its depth probe.
     """
 
     name: str
@@ -59,25 +64,6 @@ class FeatureView:
     ttl_seconds: int | None = None  # None/0 = no TTL bound
     field_mapping: dict[str, str] = field(default_factory=dict)  # src -> feature
     format: str = "parquet"  # parquet | csv | json | orc
-    # Physical as-of join strategy (SURVEY.md §4.2): "auto" (default)
-    # samples per-key history depth once per view at materialization
-    # time and picks pair / time_bucketed / union_window per the
-    # measured decision rule in operators/pit_join.py; explicit values
-    # pin the choice (e.g. a hot-SPINE workload needs "union_window" —
-    # spine skew is per-query, so auto's feature-side probe can't see it).
-    strategy: str = "auto"  # auto | pair | time_bucketed | union_window
-
-    def __post_init__(self) -> None:
-        if self.strategy not in ("auto", "pair", "time_bucketed", "union_window"):
-            raise RegistryError(
-                f"view {self.name!r}: unknown join strategy {self.strategy!r} "
-                "(expected auto | pair | time_bucketed | union_window)"
-            )
-        if self.strategy == "time_bucketed" and not self.ttl_seconds:
-            raise RegistryError(
-                f"view {self.name!r}: strategy 'time_bucketed' requires "
-                "ttl_seconds (the bucket width IS the TTL)"
-            )
 
     def read(self, spark, sf_dir: str):
         """Load the physical table (format-dispatched; CSV/JSON get
@@ -141,7 +127,6 @@ class Registry:
                 ttl_seconds=v.get("ttl_seconds"),
                 field_mapping=dict(v.get("field_mapping", {})),
                 format=v.get("format", "parquet"),
-                strategy=v.get("strategy", "auto"),
             )
             views[fv.name] = fv
         services: dict[str, FeatureService] = {}
@@ -173,7 +158,6 @@ class Registry:
                     "ttl_seconds": v.ttl_seconds,
                     "field_mapping": dict(v.field_mapping),
                     "format": v.format,
-                    "strategy": v.strategy,
                 }
                 for v in self.views.values()
             ],

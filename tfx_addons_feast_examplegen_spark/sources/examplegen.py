@@ -70,8 +70,10 @@ def substitute_params(query: str, params: dict[str, Any] | None) -> str:
     (``usage_prototype.py:46-48``). Same contract: each whole ``@name``
     token outside quotes whose name is in ``params`` is replaced with a
     SQL literal (strings quoted, ``None`` as ``NULL``, datetimes to the
-    microsecond, others verbatim). A longer token (``@begin_tsx``) and
-    text inside a quoted literal or identifier are left alone.
+    microsecond, numbers verbatim). A longer token (``@begin_tsx``) and
+    text inside a quoted literal or identifier are left alone. A value
+    with no SQL literal form (a list, dict, bytes or non-finite float)
+    raises :class:`RegistryError` naming the parameter.
     """
     if not params:
         return query
@@ -80,16 +82,24 @@ def substitute_params(query: str, params: dict[str, Any] | None) -> str:
         name = m.group(1)
         if name is None or name not in params:
             return m.group(0)
-        return _sql_literal(params[name])
+        return _sql_literal(name, params[name])
 
     return _PARAM_TOKEN.sub(_sub, query)
 
 
-def _sql_literal(value: Any) -> str:
+def _sql_literal(name: str, value: Any) -> str:
     import datetime as dt
+    import math
+    from decimal import Decimal
 
     if value is None:
         return "NULL"
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    if isinstance(value, int) or (
+        isinstance(value, (float, Decimal)) and math.isfinite(value)
+    ):
+        return str(value)
     if isinstance(value, dt.datetime):
         # isoformat omits a zero microsecond part; an aware value
         # renders its wall clock, without the zone
@@ -99,7 +109,11 @@ def _sql_literal(value: Any) -> str:
         return f"DATE '{value.isoformat()}'"
     if isinstance(value, str):
         return "'" + value.replace("'", "''") + "'"
-    return str(value)
+    raise RegistryError(
+        f"parameter @{name}: {type(value).__name__} value {value!r} has no "
+        "SQL literal (expected None, bool, int, finite float, Decimal, str, "
+        "date or datetime)"
+    )
 
 
 def route_split_patterns(
