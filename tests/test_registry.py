@@ -79,3 +79,31 @@ def test_view_path_resolution():
 def test_service_dataclass():
     s = FeatureService(name="s", features=("v:f",))
     assert s.features == ("v:f",)
+
+
+_VIEW = {
+    "name": "ev", "path": "events.parquet", "entities": ["user_id"],
+    "timestamp_col": "ts", "features": ["value"],
+}
+
+
+@pytest.mark.parametrize(
+    "cfg,match",
+    [
+        # a misspelt TTL would load as an unbounded one
+        ({"views": [{**_VIEW, "ttl_second": 60}]},
+         r"view 'ev': unknown key\(s\) \['ttl_second'\]"),
+        # the deleted per-view strategy pin
+        ({"views": [{**_VIEW, "strategy": "pair"}]},
+         r"view 'ev': unknown key\(s\) \['strategy'\]"),
+        ({"views": [{k: v for k, v in _VIEW.items() if k != "entities"}]},
+         r"view 'ev': missing required key\(s\) \['entities'\]"),
+        ({"services": [{"name": "svc", "features": [], "owner": "x"}]},
+         r"service 'svc': unknown key\(s\) \['owner'\]"),
+        ({"views": [_VIEW], "service": []},
+         r"registry: unknown top-level key\(s\) \['service'\]"),
+    ],
+)
+def test_from_dict_rejects_unknown_and_missing_keys(cfg, match):
+    with pytest.raises(RegistryError, match=match):
+        Registry.from_dict(cfg)

@@ -77,6 +77,61 @@ def test_deterministic_bytes():
     assert encode_example(row) == encode_example({"a": 2, "b": 1})
 
 
+_IST = dt.timezone(dt.timedelta(hours=5, minutes=30))
+# One record per row: every kind of the type map and its edge values.
+_GOLDEN_ROWS = [
+    {"i": 7, "neg": -3, "max": 2**63 - 1, "min": -(2**63), "t": True,
+     "f": False},
+    {"f": 2.5, "nan": math.nan, "inf": math.inf, "ninf": -math.inf,
+     "over": 1e39, "under": -1e39},
+    {"naive": dt.datetime(2024, 1, 15, 12, 0, 0, 250000),
+     "aware": dt.datetime(2024, 1, 15, 12, tzinfo=_IST)},
+    {"s": "héllo", "empty_s": "", "b": b"\x00\x01"},
+    {"ints": [1, None, 3], "floats": [0.5, math.nan, 1e39],
+     "strs": ["a", "b"], "bytes": [b"x", b""], "flags": [True, False],
+     "times": [dt.datetime(2024, 1, 15),
+               dt.datetime(2024, 1, 15, tzinfo=_IST)]},
+    {"none": None, "empty": [], "all_none": [None]},
+]
+_GOLDEN_CONTEXT = {"user_id": 7, "segment": "BUILDING", "none": None}
+_GOLDEN_FEATURE_LISTS = {
+    "value": [1.5, None, 3.5],
+    "ids": [[1, 2], [], [3]],
+    "empty": [],
+}
+
+
+def test_golden_bytes():
+    # Pinned digests: any change to the bytes the codec writes fails here.
+    import hashlib
+
+    from tfx_addons_feast_examplegen_spark.functions.tfexample import (
+        decode_sequence_example,
+        encode_sequence_example_full,
+    )
+
+    def sha(b):
+        return hashlib.sha256(b).hexdigest()
+
+    assert [sha(encode_example(r)) for r in _GOLDEN_ROWS] == [
+        "bbdf3ad5c209b2353b06949252279a1b17806d54e72512246a2900e1cf037ec9",
+        "bca0d714f2ef9eb184f479684e86605c628f96cbb625a9edb7e662b95dfcaf28",
+        "a0281752d23a19001a333feb0e330e08dc816509fe5b68823902818165bcdf7f",
+        "3cc3e89d5cf3e1c42f909c40b4704765000af6cccfc3f608b6a905df0d6c3c17",
+        "62bc8dd41377a5f134614e8e5ec886d39dc2ec9b494db23272d570d151ee1dbd",
+        "f7b3b10474f4bc0912057e87e0850f1086a38bd0a8ef5c7b5ae048b3beee5ec6",
+    ]
+    seq = encode_sequence_example_full(_GOLDEN_CONTEXT, _GOLDEN_FEATURE_LISTS)
+    assert sha(seq) == (
+        "c1daa4bcc1b591061ebaa45788c17036c9aa644461a3a504ff6af3b20e580fbb"
+    )
+    assert decode_sequence_example(seq) == (
+        {"user_id": [7], "segment": [b"BUILDING"], "none": None},
+        {"value": [[1.5], None, [3.5]], "ids": [[1, 2], None, [3]],
+         "empty": []},
+    )
+
+
 def test_sequence_example_parity_stub():
     with pytest.raises(NotImplementedError):
         encode_sequence_example({"x": 1})
@@ -112,6 +167,26 @@ def test_tfrecord_detects_corruption(tmp_path):
     open(p, "wb").write(bytes(data))
     with pytest.raises(IOError):
         list(read_tfrecords(p, compressed=False))
+
+    # A stream cut inside the second record's length header, length CRC,
+    # payload or data CRC: the reader and the chunk index both raise an
+    # IOError naming the file.
+    import re
+
+    from tfx_addons_feast_examplegen_spark.sources.tfrecord import _scan_chunks
+
+    with open(p, "wb") as f:
+        _write_record(f, b"first")  # 21 bytes
+        _write_record(f, b"payload")  # 23 bytes
+    whole = open(p, "rb").read()
+    for cut in (21 + 4, 21 + 10, 21 + 15, 21 + 21):
+        cut_p = str(tmp_path / f"cut{cut}.tfrecord")
+        open(cut_p, "wb").write(whole[:cut])
+        named = f"truncated TFRecord .* in {re.escape(cut_p)}$"
+        with pytest.raises(IOError, match=named):
+            list(read_tfrecords(cut_p, compressed=False))
+        with pytest.raises(IOError, match=named):
+            _scan_chunks(cut_p, cut_p, 1 << 10)
 
 
 def test_generate_examples_end_to_end(spark, sf_dir, tmp_path):
@@ -275,6 +350,12 @@ def test_param_substitution_quotes_strings():
     assert (
         substitute_params("@t", {"t": dt.datetime(2024, 1, 15, 1, 2, 3)})
         == "TIMESTAMP '2024-01-15 01:02:03'"
+    )
+    # an aware value binds its instant, whatever the session time zone
+    ist = dt.timezone(dt.timedelta(hours=5, minutes=30))
+    assert (
+        substitute_params("@t", {"t": dt.datetime(2024, 1, 15, 12, tzinfo=ist)})
+        == "TIMESTAMP '2024-01-15 06:30:00+00:00'"
     )
     # only whole tokens: a longer token is another (unbound) name
     assert (
@@ -693,6 +774,33 @@ def test_read_tfrecord_gzip_size_guard(spark, tmp_path):
 
     ok = read_tfrecord_dataset(spark, str(tmp_path), schema)
     assert ok.count() == 200
+
+
+def test_read_tfrecord_dataset_non_local_path(spark, tmp_path, monkeypatch):
+    # Off the local filesystem each file loads whole through binaryFile:
+    # the same decode loop reads it (a .gz file gunzipped as it streams),
+    # and the size guard covers uncompressed files too.
+    from pyspark.sql.types import StructType
+
+    from tfx_addons_feast_examplegen_spark.sources import tfrecord
+
+    monkeypatch.setattr(tfrecord, "_local_path", lambda p: None)
+    with gzip.open(tmp_path / "part-0.tfrecord.gz", "wb") as fh:
+        for i in range(10):
+            _write_record(fh, encode_example({"k": i, "t": "y"}))
+    raw = tmp_path / "part-1.tfrecord"
+    with open(raw, "wb") as fh:
+        for i in range(10, 300):
+            _write_record(fh, encode_example({"k": i, "t": "z"}))
+    schema = StructType.fromDDL("k long, t string")
+
+    df = tfrecord.read_tfrecord_dataset(spark, str(tmp_path), schema)
+    assert sorted(r.k for r in df.collect()) == list(range(300))
+    with pytest.raises(ValueError, match=r"^1 TFRecord .*part-1\.tfrecord'"):
+        tfrecord.read_tfrecord_dataset(
+            spark, str(tmp_path), schema,
+            max_compressed_file_bytes=os.path.getsize(raw) - 1,
+        )
 
 
 def test_read_tfrecord_dataset_splits_one_shard_across_tasks(spark, tmp_path):

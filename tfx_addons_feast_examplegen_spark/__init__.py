@@ -15,7 +15,7 @@ query-based ExampleGen) as an idiomatic PySpark engine:
   ``BaseExampleGenExecutor`` at ``executor.py:181``) via ``xxhash64``
   (:mod:`.operators.split`).
 - **tf.Example encoding** (reference: ``converters.py:50-53``) via a
-  dependency-free protobuf wire-format writer (:mod:`.sources.tfexample`).
+  dependency-free protobuf wire-format writer (:mod:`.functions.tfexample`).
 - **Scale extensions** for training-data pipelines: deduplication,
   similarity search, text analysis, multimodal column plumbing, streaming.
 

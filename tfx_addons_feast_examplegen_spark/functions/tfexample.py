@@ -18,6 +18,14 @@ public):
     FloatList  { repeated float value = 1 [packed = true]; }
     Int64List  { repeated int64 value = 1 [packed = true]; }
 
+    SequenceExample { Features context = 1; FeatureLists feature_lists = 2; }
+    FeatureLists    { map<string, FeatureList> feature_list = 1; }
+    FeatureList     { repeated Feature feature = 1; }
+
+Each message has one encoder and one decoder: ``encode_example`` and the
+SequenceExample context share the Features encoder, and both decoders
+read Features and Feature messages with the same functions.
+
 Type map (SURVEY.md §1.2, the reference's BigQuery->tf.Example contract):
 
     int   -> int64_list          bool      -> int64_list (0/1)
@@ -138,19 +146,27 @@ def _encode_value(v: Any) -> bytes:
     raise TypeError(f"unsupported feature type {type(v).__name__}: {v!r}")
 
 
+def _map_entry(key: str, value: bytes) -> bytes:
+    """One entry of a ``map<string, message>`` (Features, FeatureLists)."""
+    return _len_delim(
+        1, _len_delim(1, key.encode("utf-8")) + _len_delim(2, value)
+    )
+
+
+def _encode_features(features: dict[str, Any]) -> bytes:
+    """``{name: value}`` -> Features message bytes, names in sorted order."""
+    return b"".join(
+        [_map_entry(n, _encode_value(features[n])) for n in sorted(features)]
+    )
+
+
 def encode_example(row: dict[str, Any]) -> bytes:
     """dict row -> serialized tf.train.Example bytes.
 
     The engine-native analog of ``RowToExampleBytes``
     (``converters.py:50-53``).
     """
-    entries = []
-    for name in sorted(row):
-        feature = _encode_value(row[name])
-        entry = _len_delim(1, name.encode("utf-8")) + _len_delim(2, feature)
-        entries.append(_len_delim(1, entry))  # Features.feature map entry
-    features_msg = b"".join(entries)
-    return _len_delim(1, features_msg)  # Example.features = 1
+    return _len_delim(1, _encode_features(row))  # Example.features = 1
 
 
 def encode_sequence_example(row: dict[str, Any]) -> bytes:
@@ -178,50 +194,12 @@ def encode_sequence_example_full(
     ``feature_lists[name]`` is a time-ordered list whose steps each
     encode as one Feature.
     """
-    ctx_entries = []
-    for name in sorted(context):
-        feature = _encode_value(context[name])
-        entry = _len_delim(1, name.encode("utf-8")) + _len_delim(2, feature)
-        ctx_entries.append(_len_delim(1, entry))
-    ctx_msg = b"".join(ctx_entries)
-
-    fl_entries = []
-    for name in sorted(feature_lists):
-        steps = b"".join(
-            _len_delim(1, _encode_value(step)) for step in feature_lists[name]
-        )
-        entry = _len_delim(1, name.encode("utf-8")) + _len_delim(2, steps)
-        fl_entries.append(_len_delim(1, entry))
-    fl_msg = b"".join(fl_entries)
-
-    return _len_delim(1, ctx_msg) + _len_delim(2, fl_msg)
-
-
-def decode_sequence_example(data: bytes) -> tuple[dict, dict]:
-    """serialized SequenceExample -> (context, feature_lists)."""
-    context: dict[str, Any] = {}
-    feature_lists: dict[str, list] = {}
-    for f, msg in _fields(data):
-        if f == 1:  # context Features: reuse Example featuremap decoding
-            context.update(decode_example(_len_delim(1, msg)))
-        elif f == 2:  # FeatureLists
-            for f2, entry in _fields(msg):
-                if f2 != 1:
-                    continue
-                name, steps = None, []
-                for f3, v in _fields(entry):
-                    if f3 == 1:
-                        name = v.decode("utf-8")
-                    elif f3 == 2:  # FeatureList
-                        for f4, feat in _fields(v):
-                            if f4 == 1:
-                                wrapped = _len_delim(
-                                    1,
-                                    _len_delim(1, _len_delim(1, b"x") + _len_delim(2, feat)),
-                                )
-                                steps.append(decode_example(wrapped)["x"])
-                feature_lists[name] = steps
-    return context, feature_lists
+    lists = {  # FeatureList { repeated Feature feature = 1; }
+        n: b"".join([_len_delim(1, _encode_value(s)) for s in steps])
+        for n, steps in feature_lists.items()
+    }
+    fl_msg = b"".join([_map_entry(n, lists[n]) for n in sorted(lists)])
+    return _len_delim(1, _encode_features(context)) + _len_delim(2, fl_msg)
 
 
 # ---------------------------------------------------------------------------
@@ -298,36 +276,63 @@ def _fields(buf: bytes):
         yield field, val
 
 
+def _map_entries(msg: bytes):
+    """(key, value bytes) of each entry of a ``map<string, message>``
+    field; a missing value is the empty message."""
+    for f, entry in _fields(msg):
+        if f != 1:
+            continue
+        key, value = None, b""
+        for f2, v in _fields(entry):
+            if f2 == 1:
+                key = v.decode("utf-8")
+            elif f2 == 2:
+                value = v
+        yield key, value
+
+
+def _decode_feature(feature: bytes) -> list | None:
+    """Feature message bytes -> its values (None when no kind is set)."""
+    values: list | None = None
+    for kind, body in _fields(feature):
+        if kind == 1:  # bytes_list
+            values = [v for f, v in _fields(body) if f == 1]
+        elif kind == 2:  # float_list (packed)
+            packed = b"".join(v for f, v in _fields(body) if f == 1)
+            values = list(struct.unpack(f"<{len(packed) // 4}f", packed))
+        elif kind == 3:  # int64_list (packed varints)
+            packed = b"".join(v for f, v in _fields(body) if f == 1)
+            values, i = [], 0
+            while i < len(packed):
+                v, i = _read_varint(packed, i)
+                values.append(v)
+    return values
+
+
+def _decode_features(msg: bytes) -> dict[str, Any]:
+    """Features message bytes -> {name: values}."""
+    return {name: _decode_feature(v) for name, v in _map_entries(msg)}
+
+
 def decode_example(data: bytes) -> dict[str, Any]:
     """serialized Example -> {name: list-of-values} (None for empty kind)."""
     out: dict[str, Any] = {}
-    for f, features_msg in _fields(data):
-        if f != 1:
-            continue
-        for f2, entry in _fields(features_msg):
-            if f2 != 1:
-                continue
-            name, feature = None, b""
-            for f3, v in _fields(entry):
-                if f3 == 1:
-                    name = v.decode("utf-8")
-                elif f3 == 2:
-                    feature = v
-            kind_val: Any = None
-            for f4, body in _fields(feature):
-                if f4 == 1:  # bytes_list
-                    kind_val = [v for f5, v in _fields(body) if f5 == 1]
-                elif f4 == 2:  # float_list (packed)
-                    packed = b"".join(v for f5, v in _fields(body) if f5 == 1)
-                    kind_val = list(
-                        struct.unpack(f"<{len(packed) // 4}f", packed)
-                    )
-                elif f4 == 3:  # int64_list (packed varints)
-                    packed = b"".join(v for f5, v in _fields(body) if f5 == 1)
-                    vals, i = [], 0
-                    while i < len(packed):
-                        v, i = _read_varint(packed, i)
-                        vals.append(v)
-                    kind_val = vals
-            out[name] = kind_val
+    for f, msg in _fields(data):
+        if f == 1:  # Example.features
+            out.update(_decode_features(msg))
     return out
+
+
+def decode_sequence_example(data: bytes) -> tuple[dict, dict]:
+    """serialized SequenceExample -> (context, feature_lists)."""
+    context: dict[str, Any] = {}
+    feature_lists: dict[str, list] = {}
+    for f, msg in _fields(data):
+        if f == 1:  # context Features
+            context.update(_decode_features(msg))
+        elif f == 2:  # FeatureLists: each FeatureList is repeated Feature = 1
+            for name, fl in _map_entries(msg):
+                feature_lists[name] = [
+                    _decode_feature(v) for f2, v in _fields(fl) if f2 == 1
+                ]
+    return context, feature_lists

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import MISSING, dataclass, field, fields
 
 try:  # pyyaml is commonly available with pyspark images but not guaranteed
     import yaml  # type: ignore
@@ -115,8 +115,18 @@ class Registry:
 
     @classmethod
     def from_dict(cls, cfg: dict) -> "Registry":
+        """Build from a config mapping. An unknown key at any level, or a
+        missing required view or service key, raises ``RegistryError``
+        (a misspelt ``ttl_seconds`` would otherwise load as no TTL)."""
+        unknown = sorted(set(cfg) - {"views", "services"})
+        if unknown:
+            raise RegistryError(
+                f"registry: unknown top-level key(s) {unknown} "
+                "(known: ['services', 'views'])"
+            )
         views: dict[str, FeatureView] = {}
         for v in cfg.get("views", []):
+            _check_keys("view", v, FeatureView)
             fv = FeatureView(
                 name=v["name"],
                 path=v["path"],
@@ -131,6 +141,7 @@ class Registry:
             views[fv.name] = fv
         services: dict[str, FeatureService] = {}
         for s in cfg.get("services", []):
+            _check_keys("service", s, FeatureService)
             fs = FeatureService(name=s["name"], features=tuple(s["features"]))
             services[fs.name] = fs
         return cls(views=views, services=services)
@@ -213,6 +224,26 @@ class Registry:
             if feat not in out[view_name]:
                 out[view_name].append(feat)
         return out
+
+
+def _check_keys(kind: str, cfg: dict, cls) -> None:
+    """Raise ``RegistryError`` naming the entry and the key when ``cfg``
+    has a key that is no field of ``cls``, or lacks a field with no
+    default."""
+    known = {f.name: f for f in fields(cls)}
+    where = f"{kind} {cfg.get('name', '<unnamed>')!r}"
+    unknown = sorted(set(cfg) - set(known))
+    if unknown:
+        raise RegistryError(
+            f"{where}: unknown key(s) {unknown} (known: {sorted(known)})"
+        )
+    missing = [
+        k for k, f in known.items()
+        if k not in cfg and f.default is MISSING
+        and f.default_factory is MISSING
+    ]
+    if missing:
+        raise RegistryError(f"{where}: missing required key(s) {missing}")
 
 
 def testdata_registry() -> Registry:

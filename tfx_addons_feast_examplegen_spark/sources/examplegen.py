@@ -70,10 +70,11 @@ def substitute_params(query: str, params: dict[str, Any] | None) -> str:
     (``usage_prototype.py:46-48``). Same contract: each whole ``@name``
     token outside quotes whose name is in ``params`` is replaced with a
     SQL literal (strings quoted, ``None`` as ``NULL``, datetimes to the
-    microsecond, numbers verbatim). A longer token (``@begin_tsx``) and
-    text inside a quoted literal or identifier are left alone. A value
-    with no SQL literal form (a list, dict, bytes or non-finite float)
-    raises :class:`RegistryError` naming the parameter.
+    microsecond, an aware one as its UTC instant with the offset, numbers
+    verbatim). A longer token (``@begin_tsx``) and text inside a quoted
+    literal or identifier are left alone. A value with no SQL literal
+    form (a list, dict, bytes or non-finite float) raises
+    :class:`RegistryError` naming the parameter.
     """
     if not params:
         return query
@@ -101,10 +102,13 @@ def _sql_literal(name: str, value: Any) -> str:
     ):
         return str(value)
     if isinstance(value, dt.datetime):
-        # isoformat omits a zero microsecond part; an aware value
-        # renders its wall clock, without the zone
-        ts = value.replace(tzinfo=None).isoformat(sep=" ")
-        return f"TIMESTAMP '{ts}'"
+        # isoformat omits a zero microsecond part. An aware value renders
+        # as its UTC instant with the offset, which Spark reads as that
+        # instant whatever the session time zone; a naive one renders as
+        # its wall clock, read in the session time zone.
+        if value.utcoffset() is not None:
+            value = value.astimezone(dt.timezone.utc)
+        return f"TIMESTAMP '{value.isoformat(sep=' ')}'"
     if isinstance(value, dt.date):
         return f"DATE '{value.isoformat()}'"
     if isinstance(value, str):
@@ -207,9 +211,9 @@ def encode_sequence_examples(
     order_col: str,
     sequence_cols: list[str],
     context_cols: list[str] | None = None,
-    bytes_col: str = "sequence_example",
 ) -> DataFrame:
-    """Beyond-parity S8: rows -> per-key tf.SequenceExample bytes.
+    """Beyond-parity S8: rows -> one binary column ``sequence_example`` of
+    per-key tf.SequenceExample bytes.
 
     Groups rows by ``key_cols``, orders each group by ``order_col``
     (sequence time), packs ``sequence_cols`` as per-step feature lists and
@@ -241,10 +245,10 @@ def encode_sequence_examples(
                 fls = {c: [s[c] for s in steps] for c in sequence_cols}
                 out.append(encode_sequence_example_full(context, fls))
             yield pa.RecordBatch.from_pydict(
-                {bytes_col: pa.array(out, pa.binary())}
+                {"sequence_example": pa.array(out, pa.binary())}
             )
 
-    return grouped.mapInArrow(_encode, schema=f"{bytes_col} binary")
+    return grouped.mapInArrow(_encode, schema="sequence_example binary")
 
 
 def generate_examples(
@@ -326,35 +330,27 @@ def generate_examples(
                 .partitionBy("split")
                 .parquet(output_dir)
             )
-        elif output_format == FORMAT_TF_SEQUENCE_EXAMPLE_FULL:
-            seqs = encode_sequence_examples(
-                df,
-                key_cols=list(sequence_config["key_cols"]),
-                order_col=sequence_config["order_col"],
-                sequence_cols=list(sequence_config["sequence_cols"]),
-                context_cols=list(sequence_config.get("context_cols", [])),
-            )
-            encoded = hash_split(seqs, ["sequence_example"], splits, seed=seed)
-            write_partitioned_tfrecords(
-                encoded,
-                output_dir,
-                bytes_col="sequence_example",
-                split_col="split",
-            )
-            # The TFRecord formats split on the serialized bytes, so the
-            # frame actually written — not `out` — carries the on-disk
-            # split assignment; return it to keep the contract honest.
-            out = encoded
         else:
+            encoded = (
+                encode_examples(df)
+                if output_format == FORMAT_TF_EXAMPLE
+                else encode_sequence_examples(
+                    df,
+                    key_cols=list(sequence_config["key_cols"]),
+                    order_col=sequence_config["order_col"],
+                    sequence_cols=list(sequence_config["sequence_cols"]),
+                    context_cols=list(sequence_config.get("context_cols", [])),
+                )
+            )
             # The reference's base executor buckets on the hash of the
-            # serialized record (D1); encode first, split on the bytes.
-            encoded = hash_split(
-                encode_examples(df), ["example"], splits, seed=seed
-            )
+            # serialized record (D1): encode first, split on the bytes.
+            # The frame written, not the feature rows, carries the
+            # on-disk split assignment, so it is the one returned.
+            (bytes_col,) = encoded.columns
+            out = hash_split(encoded, [bytes_col], splits, seed=seed)
             write_partitioned_tfrecords(
-                encoded, output_dir, bytes_col="example", split_col="split"
+                out, output_dir, bytes_col=bytes_col, split_col="split"
             )
-            out = encoded
         if emit_artifacts:
             # The reference's usage sketch declares statistics + schema
             # outputs (usage_prototype.py:60-61, commented out — A3/A4).

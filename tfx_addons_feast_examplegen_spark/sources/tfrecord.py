@@ -20,7 +20,11 @@ sanctions mapPartitions-style code.
 
 One reader, :func:`read_tfrecord_dataset`: gzipped files stream whole;
 uncompressed files (e.g. written by another producer) split into
-record-aligned chunks by hopping frame headers.
+record-aligned chunks by hopping frame headers. Every read opens a file
+the same way (the raw stream, gunzipped as it is read when the name ends
+in ``.gz``), and one header reader, :func:`_read_header`, parses frames
+for both the record iterator and the chunk index, so a truncated or
+corrupt frame raises the same ``IOError`` naming its file on every path.
 """
 
 from __future__ import annotations
@@ -67,19 +71,29 @@ def _write_record(f, rec: bytes) -> None:
     f.write(struct.pack("<I", _masked_crc(rec)))
 
 
+def _read_header(f, origin: str) -> int | None:
+    """Read one 12-byte frame header and return its record length; None
+    at a clean end of stream. Raises ``IOError`` naming ``origin`` on a
+    truncated header or a bad length CRC."""
+    header = f.read(12)
+    if not header:
+        return None
+    if len(header) < 12:
+        raise IOError(f"truncated TFRecord frame header in {origin}")
+    length, lcrc = struct.unpack("<QI", header)
+    if lcrc != _masked_crc(header[:8]):
+        raise IOError(f"corrupt TFRecord length crc in {origin}")
+    return length
+
+
 def _iter_framed(f, origin: str):
     """Yield records from an open TFRecord stream, verifying both CRCs."""
-    while True:
-        header = f.read(8)
-        if not header:
-            return
-        (length,) = struct.unpack("<Q", header)
-        (lcrc,) = struct.unpack("<I", f.read(4))
-        if lcrc != _masked_crc(header):
-            raise IOError(f"corrupt TFRecord length crc in {origin}")
+    while (length := _read_header(f, origin)) is not None:
         data = f.read(length)
-        (dcrc,) = struct.unpack("<I", f.read(4))
-        if dcrc != _masked_crc(data):
+        tail = f.read(4)
+        if len(tail) < 4:  # a short payload leaves no room for its CRC
+            raise IOError(f"truncated TFRecord record in {origin}")
+        if struct.unpack("<I", tail)[0] != _masked_crc(data):
             raise IOError(f"corrupt TFRecord data crc in {origin}")
         yield data
 
@@ -104,20 +118,13 @@ def _local_path(p: str) -> str | None:
 
 def _scan_chunks(fs_path: str, origin: str, target_bytes: int):
     """Record-aligned (offset, nbytes) chunks of an UNCOMPRESSED TFRecord
-    file, by hopping frame headers (16 bytes read + seek per record — no
+    file, by hopping frame headers (12 bytes read + seek per record — no
     record data is touched). Raises on a malformed frame."""
     size = os.path.getsize(fs_path)
     chunks = []
     with open(fs_path, "rb") as f:
         start = pos = 0
-        while pos < size:
-            header = f.read(8)
-            if len(header) < 8:
-                raise IOError(f"truncated TFRecord frame in {origin}")
-            (length,) = struct.unpack("<Q", header)
-            (lcrc,) = struct.unpack("<I", f.read(4))
-            if lcrc != _masked_crc(header):
-                raise IOError(f"corrupt TFRecord length crc in {origin}")
+        while (length := _read_header(f, origin)) is not None:
             pos += 12 + length + 4
             if pos > size:
                 raise IOError(f"truncated TFRecord record in {origin}")
@@ -146,13 +153,13 @@ def read_tfrecord_dataset(
       column pruned — the scan reads paths and lengths, never bytes).
     - **Uncompressed files are split into record-aligned byte-range
       chunks** by a distributed index pass: one task per file hops the
-      frame headers (16 bytes per record, no record data) and emits
+      frame headers (12 bytes per record, no record data) and emits
       ``(offset, nbytes)`` chunks of ~``target_chunk_bytes``. The decode
       stage then reads only its chunk — task memory is O(chunk), and a
       10 GB shard becomes ~160 parallel 64 MB tasks instead of one
       task holding 10 GB (TFRecord has no self-synchronizing marker, so
       a header-hop index is the only safe way to split; the hop pass
-      touches page-cache-friendly 16-byte reads).
+      touches page-cache-friendly 12-byte reads).
     - **Gzip files stream**: the decoder wraps the open file handle, so
       task memory is O(record) regardless of file size — but the file
       itself is one task (gzip is not seekable), so files larger than
@@ -164,8 +171,10 @@ def read_tfrecord_dataset(
 
     Non-``file:`` filesystems (object stores) fall back to whole-file
     ``binaryFile`` loading — splitting needs seekable opens, which the
-    Python side only has locally; the fallback still enforces
-    ``max_compressed_file_bytes`` against ALL files as its memory guard.
+    Python side only has locally — so there the one size guard covers
+    every file, not only gzip ones. A gzip file there still decompresses
+    as it is decoded, never whole. Both filesystems feed the same decode
+    loop.
 
     Decoding deframes (CRC-verified), decodes each ``tf.train.Example``
     with the hand-rolled wire codec, and coerces features onto
@@ -231,53 +240,36 @@ def read_tfrecord_dataset(
         .option("pathGlobFilter", "*.tfrecord*")
         .load(path)
     )
-
-    batch_rows = 4096
-
-    def _flush(cols, force=False):
-        n_done = len(cols[names[0]]) if names else 0
-        if n_done and (force or n_done >= batch_rows):
-            batch = pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
-            for c in cols.values():
-                c.clear()
-            yield batch
-
-    def _decode_stream(f, origin, cols):
-        """Decode records from an open framed stream into ``cols``,
-        yielding a bounded Arrow batch every ``batch_rows`` records — flat
-        memory even when one (gzip) stream holds millions of records."""
-        for rec in _iter_framed(f, origin):
-            ex = decode_example(rec)
-            for n in names:
-                cols[n].append(_coerce(ex.get(n), types[n], n))
-            yield from _flush(cols)
-
-    # --- local (file:) scheme: chunked + streaming decode ---------------
     files = [
         (r["path"], int(r["length"]))
         for r in listing.select("path", "length").collect()
     ]  # metadata only — one row per FILE, driver-small by definition
-    local_files = [(p, _local_path(p), ln) for p, ln in files]
-    if local_files and all(fs is not None for _, fs, _ in local_files):
-        over = [
-            (p, ln)
-            for p, fs, ln in local_files
-            if p.endswith(".gz") and ln > max_compressed_file_bytes
-        ]
-        if over:
-            worst_p, worst_len = max(over, key=lambda t: t[1])
-            raise ValueError(
-                f"{len(over)} gzip TFRecord file(s) exceed "
-                f"max_compressed_file_bytes={max_compressed_file_bytes} "
-                f"(largest: {worst_p!r} at {worst_len} bytes). Gzip is "
-                "not seekable, so each such file is a single streaming "
-                "task — write smaller shards, use uncompressed TFRecords "
-                "(which split into record-aligned chunks), or raise the "
-                "limit to accept the straggler."
-            )
+    local = bool(files) and all(_local_path(p) is not None for p, _ in files)
+
+    # One task holds each gzip file (not seekable) and, off the local
+    # filesystem, each whole file.
+    over = [
+        (p, ln)
+        for p, ln in files
+        if ln > max_compressed_file_bytes and (p.endswith(".gz") or not local)
+    ]
+    if over:
+        worst_p, worst_len = max(over, key=lambda t: t[1])
+        raise ValueError(
+            f"{len(over)} TFRecord file(s) exceed "
+            f"max_compressed_file_bytes={max_compressed_file_bytes} "
+            f"(largest: {worst_p!r} at {worst_len} bytes). Each is read by "
+            "a single task: gzip is not seekable, and a non-local "
+            "filesystem loads whole files. Write smaller shards, write "
+            "uncompressed TFRecords on a local filesystem (which split "
+            "into record-aligned chunks), or raise the limit to accept "
+            "the straggler."
+        )
+
+    if local:
         paths_df = spark.createDataFrame(
-            [(p, fs) for p, fs, _ in local_files], "path string, fs string"
-        ).repartition(max(1, min(len(local_files), 256)))
+            [(p, _local_path(p)) for p, _ in files], "path string, fs string"
+        ).repartition(max(1, min(len(files), 256)))
 
         index_ddl = "path string, fs string, offset long, nbytes long"
         index_schema = to_arrow_schema(StructType.fromDDL(index_ddl))
@@ -297,50 +289,53 @@ def read_tfrecord_dataset(
                 ]
                 yield pa.RecordBatch.from_pylist(rows, schema=index_schema)
 
-        chunks_df = paths_df.mapInArrow(_index, schema=index_ddl)
-        n_parallel = spark.sparkContext.defaultParallelism
-        chunks_df = chunks_df.repartition(n_parallel)
-
-        def _parse_chunks(batches):
-            cols: dict[str, list] = {n: [] for n in names}
-            for batch in batches:
-                for p, fs, off, nb in zip(*batch.to_pydict().values()):
-                    if nb == -1:  # gzip: stream, O(record) memory
-                        with open(fs, "rb") as raw, gzip.GzipFile(
-                            fileobj=raw
-                        ) as f:
-                            yield from _decode_stream(f, p, cols)
-                    elif nb > 0:  # bounded chunk read
-                        with open(fs, "rb") as f:
-                            f.seek(off)
-                            chunk = io.BytesIO(f.read(nb))
-                        yield from _decode_stream(chunk, p, cols)
-            yield from _flush(cols, force=True)
-
-        return chunks_df.mapInArrow(_parse_chunks, schema=schema)
-
-    # --- non-local fallback: whole-file loads (binaryFile) --------------
-    oversize = [(p, ln) for p, ln in files if ln > max_compressed_file_bytes]
-    if oversize:
-        worst_p, worst_len = max(oversize, key=lambda t: t[1])
-        raise ValueError(
-            f"{len(oversize)} TFRecord file(s) exceed "
-            f"max_compressed_file_bytes={max_compressed_file_bytes} on a "
-            f"non-seekable filesystem (largest: {worst_p!r} at "
-            f"{worst_len} bytes); each whole file is held by one task "
-            "here — write smaller shards or raise the limit explicitly."
+        inputs = paths_df.mapInArrow(_index, schema=index_ddl).repartition(
+            spark.sparkContext.defaultParallelism
         )
 
-    def _parse(batches):
+        def _streams(batch):
+            for p, fs, off, nb in zip(*batch.to_pydict().values()):
+                if nb == -1:  # gzip: the whole file, streamed
+                    yield p, open(fs, "rb")
+                else:  # bounded chunk read
+                    with open(fs, "rb") as f:
+                        f.seek(off)
+                        chunk = f.read(nb)
+                    yield p, io.BytesIO(chunk)
+    else:
+        inputs = listing.select("path", "content")
+
+        def _streams(batch):
+            for p, blob in zip(*batch.to_pydict().values()):
+                yield p, io.BytesIO(blob)
+
+    batch_rows = 4096
+
+    def _flush(cols, force=False):
+        n_done = len(cols[names[0]]) if names else 0
+        if n_done and (force or n_done >= batch_rows):
+            batch = pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
+            for c in cols.values():
+                c.clear()
+            yield batch
+
+    def _decode(batches):
+        """Decode every record of every stream into bounded Arrow batches
+        of ``batch_rows`` records. A gzip stream is decompressed as it is
+        read, so memory stays flat whatever the file size."""
         cols: dict[str, list] = {n: [] for n in names}
         for batch in batches:
-            for p, blob in zip(*batch.to_pydict().values()):
-                if p.endswith(".gz"):
-                    blob = gzip.decompress(blob)
-                yield from _decode_stream(io.BytesIO(blob), p, cols)
+            for p, raw in _streams(batch):
+                gz = p.endswith(".gz")
+                with raw, (gzip.GzipFile(fileobj=raw) if gz else raw) as f:
+                    for rec in _iter_framed(f, p):
+                        ex = decode_example(rec)
+                        for n in names:
+                            cols[n].append(_coerce(ex.get(n), types[n], n))
+                        yield from _flush(cols)
         yield from _flush(cols, force=True)
 
-    return listing.select("path", "content").mapInArrow(_parse, schema=schema)
+    return inputs.mapInArrow(_decode, schema=schema)
 
 
 def write_partitioned_tfrecords(
