@@ -125,21 +125,50 @@ def test_multiple_entities_independent(spark):
     assert rows == {1: 10.0, 2: 20.0}
 
 
-def test_static_view_one_row_per_key_and_set_ops(spark, sf_dir):
-    from tfx_addons_feast_examplegen_spark.operators.pit_join import _static_join
+def _registry(tmp_path, tables, views):
+    """A Registry over parquet copies of ``tables`` ({name: frame}) in
+    ``tmp_path``; each view's ``path`` names its table."""
+    from tfx_addons_feast_examplegen_spark.registry import FeatureView, Registry
+
+    for name, df in tables.items():
+        df.write.parquet(str(tmp_path / f"{name}.parquet"))
+    return Registry(views={
+        v["name"]: FeatureView(
+            **{**v, "path": str(tmp_path / f"{v['path']}.parquet")}
+        )
+        for v in views
+    })
+
+
+def _materialize(ent, reg, features, **kw):
+    from tfx_addons_feast_examplegen_spark.operators.pit_join import (
+        materialize_features,
+    )
+
+    return materialize_features(
+        ent.sparkSession, entity_query=ent, features=features, registry=reg,
+        sf_dir="", entity_ts_col="ts", **kw,
+    )
+
+
+def test_static_view_one_row_per_key_and_set_ops(spark, sf_dir, tmp_path):
     from tfx_addons_feast_examplegen_spark.queries import queries
 
-    ent = spark.createDataFrame([(1,), (2,), (3,)], "uid long")
+    ent = _entities(spark, [(1, T(2024, 1, 10)), (2, T(2024, 1, 10)),
+                            (3, T(2024, 1, 10))])
     dim = spark.createDataFrame(
         [(1, 5.0, "a"), (1, 6.0, "b"), (2, 7.0, "c")],
         "uid long, x double, y string",
     )
-    out = _static_join(ent, dim, join_keys=["uid"], features=["x", "y"],
-                       output_prefix="d_")
-    assert out.columns == ["uid", "d_x", "d_y"]
+    reg = _registry(tmp_path, {"dim": dim}, [dict(
+        name="d", path="dim", entities=("uid",), timestamp_col="",
+        features=("x", "y"),
+    )])
+    out = _materialize(ent, reg, ["d:x", "d:y"], full_feature_names=True)
+    assert out.columns == ["uid", "ts", "d__x", "d__y"]
     got = out.collect()
     assert len(got) == 3  # a duplicated dimension key still gives one row
-    rows = {r.uid: (r.d_x, r.d_y) for r in got}
+    rows = {r.uid: (r.d__x, r.d__y) for r in got}
     assert rows[1] in {(5.0, "a"), (6.0, "b")}  # both fields from one row
     assert rows[2] == (7.0, "c")
     assert rows[3] == (None, None)
@@ -147,6 +176,41 @@ def test_static_view_one_row_per_key_and_set_ops(spark, sf_dir):
     assert out.exceptAll(out).count() == 0
     multiview = queries()["pit_join_multiview"](spark, sf_dir)
     assert multiview.exceptAll(multiview).count() == 0
+
+
+def test_view_keyed_on_an_earlier_views_feature(spark, tmp_path):
+    # The second view's key `region` is not in the entity frame but a
+    # feature of the first view, so its spine comes from the running
+    # frame: each entity row is joined as of its own time, first to its
+    # account's region, then to that region's score.
+    ent = _entities(spark, [(1, T(2024, 1, 10)), (1, T(2024, 1, 3)),
+                            (2, T(2024, 1, 10)), (3, T(2024, 1, 10))])
+    accounts = spark.createDataFrame(
+        [(1, T(2024, 1, 1), "r1"), (1, T(2024, 1, 5), "r2"),
+         (2, T(2024, 1, 2), "r2")],
+        "uid long, fts timestamp, region string",
+    )
+    regions = spark.createDataFrame(
+        [("r1", T(2024, 1, 2), 1.0), ("r2", T(2024, 1, 4), 2.0),
+         ("r2", T(2024, 1, 9), 3.0), ("r1", T(2024, 1, 11), 9.0)],
+        "region string, rts timestamp, score double",
+    )
+    reg = _registry(tmp_path, {"accounts": accounts, "regions": regions}, [
+        dict(name="acct", path="accounts", entities=("uid",),
+             timestamp_col="fts", features=("region",)),
+        dict(name="reg", path="regions", entities=("region",),
+             timestamp_col="rts", features=("score",)),
+    ])
+    out = _materialize(ent, reg, ["acct:region", "reg:score"])
+    assert out.columns == ["uid", "ts", "region", "score"]
+    assert sorted(
+        ((r.uid, r.ts, r.region, r.score) for r in out.collect()), key=str
+    ) == sorted([
+        (1, T(2024, 1, 10), "r2", 3.0),  # region r2 since Jan 5; score Jan 9
+        (1, T(2024, 1, 3), "r1", 1.0),   # still r1; r1's Jan 11 score is future
+        (2, T(2024, 1, 10), "r2", 3.0),
+        (3, T(2024, 1, 10), None, None),  # no account: NULL key, no score
+    ], key=str)
 
 
 def test_per_snapshot_asof(spark):
@@ -282,32 +346,35 @@ def test_null_entity_key_keeps_row_with_null_features(spark):
     assert rows[None] is None
 
 
-def test_spine_source_chain_is_linear_and_equivalent(spark):
-    # Chaining N as-of joins with spine_source=base keeps the analyzed
-    # logical tree linear in N (the chained form doubles per level and
-    # pays superlinear compile time on wide feature services); results
-    # are identical either way.
+def test_spine_source_chain_is_linear_and_equivalent(spark, tmp_path):
+    # materialize_features takes every view's spine from the entity frame,
+    # so its analyzed logical tree grows linearly in the number of views.
+    # Chaining point_in_time_join spines each view on the running frame,
+    # which doubles the tree per view; results are identical either way.
     ent = _entities(spark, [(1, T(2024, 1, 10)), (2, T(2024, 1, 10))])
     feat = _features(spark, [(1, T(2024, 1, 5), 1, 5.0)])
+    reg = _registry(tmp_path, {"feat": feat}, [
+        dict(name=f"f{i}", path="feat", entities=("uid",),
+             timestamp_col="fts", features=(f"v{i}",), created_col="created",
+             field_mapping={"val": f"v{i}"})
+        for i in range(4)
+    ])
 
-    def chain(spine_source):
-        out = ent
-        for i in range(4):
-            out = _join(
-                out,
-                feat.withColumnRenamed("val", f"v{i}"),
-                features=[f"v{i}"],
-                spine_source=spine_source,
-            )
-        return out
+    def joins(df):
+        return df._jdf.queryExecution().analyzed().toString().count("Join")
 
-    base = chain(ent)
-    chained = chain(None)
-    n_base = base._jdf.queryExecution().analyzed().toString().count("Join")
-    n_chained = chained._jdf.queryExecution().analyzed().toString().count("Join")
-    assert n_base < n_chained  # logical tree no longer doubles per level
+    flat = _materialize(ent, reg, [f"f{i}:v{i}" for i in range(4)])
+    chained = ent
+    for i in range(4):
+        chained = _join(
+            chained, feat.withColumnRenamed("val", f"v{i}"), features=[f"v{i}"]
+        )
+    assert joins(flat) == 4 * joins(_materialize(ent, reg, ["f0:v0"]))
+    assert joins(flat) < joins(chained)  # logical tree no longer doubles
     key = lambda r: (r.uid, r.v0, r.v1, r.v2, r.v3)  # noqa: E731
-    assert sorted(map(key, base.collect())) == sorted(map(key, chained.collect()))
+    assert sorted(map(key, flat.collect())) == sorted(
+        map(key, chained.collect())
+    )
 
 
 def test_nearest_event_join_picks_closest_either_side(spark):

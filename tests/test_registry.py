@@ -102,6 +102,15 @@ _VIEW = {
          r"service 'svc': unknown key\(s\) \['owner'\]"),
         ({"views": [_VIEW], "service": []},
          r"registry: unknown top-level key\(s\) \['service'\]"),
+        # a bare string would load as one-letter keys or features
+        ({"views": [{**_VIEW, "entities": "user_id"}]},
+         r"view 'ev': 'entities' must be a non-empty list, got 'user_id'"),
+        ({"views": [{**_VIEW, "features": "amount"}]},
+         r"view 'ev': 'features' must be a non-empty list, got 'amount'"),
+        ({"views": [{**_VIEW, "entities": []}]},
+         r"view 'ev': 'entities' must be a non-empty list, got \[\]"),
+        ({"views": [{**_VIEW, "features": []}]},
+         r"view 'ev': 'features' must be a non-empty list, got \[\]"),
     ],
 )
 def test_from_dict_rejects_unknown_and_missing_keys(cfg, match):

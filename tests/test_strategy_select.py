@@ -204,16 +204,23 @@ def test_invalid_strategy_rejected(spark):
     feat = spark.createDataFrame(
         [(1, None, 1.0)], "user_id long, ts timestamp, score double"
     )
+    join = lambda **kw: point_in_time_join(  # noqa: E731
+        feat, feat, entity_ts_col="ts", feature_ts_col="ts",
+        features=["score"], **{"join_keys": ["user_id"], **kw},
+    )
     with pytest.raises(RegistryError, match="unknown join strategy 'sortmerge'"):
-        point_in_time_join(
-            feat,
-            feat,
-            join_keys=["user_id"],
-            entity_ts_col="ts",
-            feature_ts_col="ts",
-            features=["score"],
-            strategy="sortmerge",
-        )
+        join(strategy="sortmerge")
+    # no keys returned NULL features under pair and raised a type error
+    # under union_window
+    for strategy in ("pair", "union_window"):
+        with pytest.raises(RegistryError, match="empty join_keys"):
+            join(join_keys=[], strategy=strategy)
+    # a negative TTL returned all-NULL features; a fractional one divided
+    # by zero under time_bucketed; a string or bool is no TTL at all
+    for ttl in (-5, 0.5, "7d", True):
+        for strategy in ("pair", "time_bucketed", "union_window"):
+            with pytest.raises(RegistryError, match="ttl_seconds must be None or"):
+                join(ttl_seconds=ttl, strategy=strategy)
 
 
 def _perfbench_workloads():
@@ -227,17 +234,64 @@ def _perfbench_workloads():
     return mod
 
 
+# Operator counts of the initial executed plan of the frame
+# materialize_features returns on perfbench's `tiny` seed-1 inputs (the
+# same at 2 and 4 cores). Plan counts do not move with host load, so a
+# change to the as-of layer that adds a scan, a shuffle or a join shows
+# here. `scan:<file>` counts file scans per input table.
+_COUNTED = (
+    "ShuffleExchange", "BroadcastExchange", "SortMergeJoin",
+    "BroadcastHashJoin", "SortAggregate", "HashAggregate", "Window",
+    "Generate", "Union",
+)
+_EXPECTED_PLAN = {
+    "examplegen_tfrecord": {
+        "ShuffleExchange": 6, "BroadcastExchange": 3, "SortMergeJoin": 2,
+        "BroadcastHashJoin": 3, "SortAggregate": 6, "HashAggregate": 4,
+        "Window": 0, "Generate": 0, "Union": 0,
+        "scan:orders": 3, "scan:events": 2, "scan:customer": 1,
+    },
+    "examplegen_parquet_hotkey": {
+        "ShuffleExchange": 8, "BroadcastExchange": 4, "SortMergeJoin": 2,
+        "BroadcastHashJoin": 4, "SortAggregate": 6, "HashAggregate": 6,
+        "Window": 1, "Generate": 1, "Union": 1,
+        "scan:orders": 4, "scan:events": 2, "scan:customer": 1,
+        "scan:profiles": 1,
+    },
+}
+
+
+def _plan_counts(df) -> dict[str, int]:
+    """Counts of the ``_COUNTED`` operators, and of file scans per table,
+    in ``df``'s initial executed plan (before adaptive re-planning)."""
+    counts = dict.fromkeys(_COUNTED, 0)
+    stack = [df._jdf.queryExecution().executedPlan().initialPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName().removesuffix("Exec")
+        if name in counts:
+            counts[name] += 1
+        if name == "FileSourceScan":
+            table = node.relation().location().rootPaths().head().getName()
+            key = "scan:" + table.removesuffix(".parquet")
+            counts[key] = counts.get(key, 0) + 1
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return counts
+
+
 def test_perfbench_inputs_resolve_to_expected_strategies(spark, sf_dir, tmp_path):
     # perfbench fails every run whose strategy mix differs from the one
     # its workloads declare; a change to the rule or the probe shows here
-    # first, on the generated inputs at their self-test size.
+    # first, on the generated inputs at their self-test size. The plan
+    # counts guard the shape of the as-of layer on the same inputs.
     wl = _perfbench_workloads()
     sql = substitute_params(wl.ENTITY_SQL, wl.RANGE_PARAMS)
     try:
         for w in wl.WORKLOADS.values():
             inputs = wl.materialize(str(tmp_path), w.family, "tiny", 1)
             register_tables(spark, inputs)
-            materialize_features(
+            df = materialize_features(
                 spark,
                 entity_query=sql,
                 features="training",
@@ -245,5 +299,6 @@ def test_perfbench_inputs_resolve_to_expected_strategies(spark, sf_dir, tmp_path
                 sf_dir=inputs,
             )
             assert last_strategy_choices() == w.expected_strategies, w.name
+            assert _plan_counts(df) == _EXPECTED_PLAN[w.name], w.name
     finally:
         register_tables(spark, sf_dir)

@@ -47,10 +47,16 @@ Spark-first design decisions (scale rationale):
   §4.2) and ``strategy="union_window"`` replaces pair enumeration with one
   sorted running frame. :func:`materialize_features` picks the strategy
   per view from a cached per-table depth probe.
+- **One shape for every view.** Steps 2-3 are one private "latest" step
+  (the strategy, or for a static view with no event time a per-key
+  ``first``) between one spine function and one join-back, so a change to
+  how the newest row is found touches only that step.
 - Small feature views broadcast automatically (AQE); no hints needed.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -73,7 +79,6 @@ def point_in_time_join(
     ttl_seconds: int | None = None,
     output_prefix: str = "",
     strategy: str = "pair",
-    spine_source: DataFrame | None = None,
 ) -> DataFrame:
     """As-of join one feature table onto an entity spine (J1-J4, J6).
 
@@ -82,6 +87,11 @@ def point_in_time_join(
     (and ``feature_ts >= entity_ts - ttl`` when a TTL bounds staleness),
     ties broken by newest ``created_col``. Entities with no candidate keep
     their row with NULL features (left-outer semantics).
+
+    Three steps, the ones :func:`materialize_features` runs per view: the
+    distinct (keys, ts) spine of ``entity_df`` (:func:`_spine`), the newest
+    payload per spine row (:func:`_latest`), and a left join of that
+    payload back onto ``entity_df`` (:func:`_attach`).
 
     ``strategy`` picks the physical shape of the one step that finds the
     newest feature payload per distinct (keys, ts) spine row; results are
@@ -111,19 +121,62 @@ def point_in_time_join(
       payload onto each spine row with a running ``last(ignorenulls)``
       frame; see :func:`_union_window_latest`.
 
-    ``spine_source`` (default ``entity_df``) is the frame the distinct
-    (keys, ts) spine and candidate set are computed from. When chaining
-    several as-of joins, pass the ORIGINAL entity frame here while
-    ``entity_df`` is the running chain. The *physical* plan is the same
-    either way (Catalyst's outer-join elimination prunes the chained left
-    joins out of the spine's distinct subtree), but the *logical* tree
-    doubles per level without it, and analysis/optimization cost follows:
-    measured compile time for a 10-view chain is 6.3s chained vs 0.9s
-    (flat) with ``spine_source`` — which is driver-side latency per query
-    on wide feature services. Requires ``join_keys`` and
-    ``entity_ts_col`` to exist in ``spine_source`` with the same values
-    as in ``entity_df``.
+    Chaining calls derives each spine from the running chain, so the
+    logical tree doubles per call; :func:`materialize_features` takes
+    each view's spine from the entity frame instead.
     """
+    latest = _latest(
+        _spine(entity_df, join_keys, entity_ts_col), feature_df,
+        join_keys=join_keys, feature_ts_col=feature_ts_col, features=features,
+        created_col=created_col, ttl_seconds=ttl_seconds, strategy=strategy,
+    )
+    return _attach(entity_df, latest, join_keys, entity_ts_col, features, output_prefix)
+
+
+def _all(conds) -> Column:
+    """The AND of ``conds`` (one or more boolean columns)."""
+    return functools.reduce(lambda a, b: a & b, conds)
+
+
+def _spine(df: DataFrame, join_keys: list[str], ts_col: str) -> DataFrame:
+    """Distinct (keys, ts) spine as ``__ek_*`` / ``__ent_ts``.
+
+    The reference's synthesized row id is concat(keys, ts), so this is the
+    same grain. Helper names are unique across both join sides so every
+    later reference resolves by name (the spine derives from the frame it
+    is joined back onto).
+    """
+    return df.select(
+        *[F.col(k).alias(f"__ek_{k}") for k in join_keys],
+        F.col(ts_col).alias("__ent_ts"),
+    ).distinct()
+
+
+def _latest(
+    spine: DataFrame,
+    feature_df: DataFrame,
+    *,
+    join_keys: list[str],
+    feature_ts_col: str | None,
+    features: list[str],
+    created_col: str | None,
+    ttl_seconds: int | None,
+    strategy: str,
+) -> DataFrame:
+    """The newest feature payload per spine row: ``__ek_*``, ``__ent_ts``
+    and the ``__payload`` struct of ``features``.
+
+    A static view (no ``feature_ts_col``; an extension beyond the
+    reference, whose views always carry event time) has no time to be
+    newest at, so its one row per key comes from ``first`` over a struct of
+    the features across the whole table, keyed ``__ek_*`` alone; the
+    attach step's key join does the spine's part. ``first`` is the aggregate Spark itself
+    plans ``dropDuplicates`` as, spelled out because a left join onto a
+    ``dropDuplicates`` frame fails set operations on the result
+    (``exceptAll`` raises INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND).
+    """
+    if not join_keys:
+        raise RegistryError("point_in_time_join: empty join_keys")
     if not features:
         raise RegistryError("point_in_time_join: empty feature list")
     if strategy not in _STRATEGIES:
@@ -131,47 +184,48 @@ def point_in_time_join(
             f"point_in_time_join: unknown join strategy {strategy!r} "
             "(expected pair | time_bucketed | union_window)"
         )
+    # type(), not isinstance(): a bool is an int but no TTL
+    if ttl_seconds is not None and (type(ttl_seconds) is not int or ttl_seconds < 0):
+        raise RegistryError(
+            "point_in_time_join: ttl_seconds must be None or a non-negative "
+            f"int, got {ttl_seconds!r}"
+        )
     if strategy == "time_bucketed" and not ttl_seconds:
         raise RegistryError(
             "point_in_time_join: strategy 'time_bucketed' requires "
             "ttl_seconds (the bucket width is the TTL)"
         )
 
-    # Distinct (keys, ts) spine: the reference's synthesized row id is
-    # concat(keys, ts), so this is the same grain. Helper names are unique
-    # across both join sides so every later reference resolves by name
-    # (avoids self-join attribute ambiguity — the spine derives from
-    # entity_df).
-    base = spine_source if spine_source is not None else entity_df
-    spine = (
-        base.select(
-            *[F.col(k).alias(f"__ek_{k}") for k in join_keys],
-            F.col(entity_ts_col).alias("__ent_ts"),
-        )
-        .distinct()
-    )
+    if not feature_ts_col:
+        return feature_df.groupBy(
+            *[F.col(k).alias(f"__ek_{k}") for k in join_keys]
+        ).agg(F.first(F.struct(*features)).alias("__payload"))
     kw = dict(join_keys=join_keys, feature_ts_col=feature_ts_col, features=features,
               created_col=created_col, ttl_seconds=ttl_seconds)
     if strategy == "union_window":
-        latest = _union_window_latest(spine, feature_df, **kw)
-    else:
-        latest = _pair_latest(
-            spine, feature_df, bucketed=(strategy == "time_bucketed"), **kw
-        )
-    latest = latest.select(
-        *[F.col(f"__ek_{k}") for k in join_keys],
-        F.col("__ent_ts"),
-        *[F.col(f"__payload.`{f}`").alias(f"{output_prefix}{f}") for f in features],
+        return _union_window_latest(spine, feature_df, **kw)
+    return _pair_latest(
+        spine, feature_df, bucketed=(strategy == "time_bucketed"), **kw
     )
 
-    join_cond = None
-    for k in join_keys:
-        c = entity_df[k] == F.col(f"__ek_{k}")
-        join_cond = c if join_cond is None else (join_cond & c)
-    join_cond = join_cond & (entity_df[entity_ts_col] == F.col("__ent_ts"))
 
-    helper_cols = [f"__ek_{k}" for k in join_keys] + ["__ent_ts"]
-    return entity_df.join(latest, join_cond, "left").drop(*helper_cols)
+def _attach(
+    out: DataFrame, latest: DataFrame, join_keys: list[str],
+    entity_ts_col: str | None, features: list[str], prefix: str,
+) -> DataFrame:
+    """Left-join each payload back onto ``out`` — on the keys plus
+    ``entity_ts_col``, or on the keys alone for a static view (no
+    ``entity_ts_col``) — naming the features ``prefix + feature``. Rows of
+    ``out`` with no payload keep NULL features."""
+    on = [(out[k], f"__ek_{k}") for k in join_keys]
+    if entity_ts_col:
+        on.append((out[entity_ts_col], "__ent_ts"))
+    payload = latest.select(
+        *[F.col(h) for _, h in on],
+        *[F.col(f"__payload.`{f}`").alias(f"{prefix}{f}") for f in features],
+    )
+    cond = _all(c == F.col(h) for c, h in on)
+    return out.join(payload, cond, "left").drop(*[h for _, h in on])
 
 
 def _pair_latest(
@@ -197,7 +251,7 @@ def _pair_latest(
 
     if bucketed:
         # One bucket per feature row; entity probes bucket(ts) and
-        # bucket(ts)-1 (posexplode of the two offsets) so every feature
+        # bucket(ts)-1 (explode of the two offsets) so every feature
         # in [ts-ttl, ts] shares a bucket with the probe.
         bucket = lambda ts_col: F.floor(  # noqa: E731
             F.unix_timestamp(ts_col) / F.lit(int(ttl_seconds))
@@ -206,10 +260,7 @@ def _pair_latest(
         probes = F.array(bucket(ent_ts), bucket(ent_ts) - F.lit(1))
         spine = spine.select("*", F.explode(probes).alias("__e_bucket"))
 
-    cond = None
-    for k in join_keys:
-        c = F.col(f"__ek_{k}") == F.col(f"__fk_{k}")
-        cond = c if cond is None else (cond & c)
+    cond = _all(F.col(f"__ek_{k}") == F.col(f"__fk_{k}") for k in join_keys)
     if bucketed:
         cond = cond & (F.col("__e_bucket") == F.col("__f_bucket"))
     time_cond = F.col("__f_ts") <= ent_ts
@@ -227,7 +278,8 @@ def _pair_latest(
         # per feature row), so no dedup needed; drop the helper column.
         candidates = candidates.drop("__e_bucket", "__f_bucket")
 
-    # Latest-wins dedup via max_by hash-agg (no sort; see module docstring).
+    # Latest-wins dedup via max_by: a SortAggregate on the group keys
+    # (struct payload; see module docstring).
     ordering = (
         F.struct(F.col("__f_ts"), F.col("__f_created"))
         if created_col
@@ -278,21 +330,18 @@ def _union_window_latest(
     # keys still survive via the final left join. A feature row with a
     # null event time never satisfies `feature.ts <= entity.ts` either
     # (it would sort first and be carried), so it goes too.
-    def _non_null(df: DataFrame, cols: list[str]) -> DataFrame:
-        cond = None
-        for c in cols:
-            k = F.col(c).isNotNull()
-            cond = k if cond is None else (cond & k)
-        return df.filter(cond)
-
-    feat_stream = _non_null(feature_df, [*join_keys, feature_ts_col]).select(
+    feat_stream = feature_df.filter(
+        _all(F.col(c).isNotNull() for c in [*join_keys, feature_ts_col])
+    ).select(
         *[F.col(k).alias(f"__ek_{k}") for k in join_keys],
         F.col(feature_ts_col).alias("__ts"),
         F.lit(0).alias("__is_spine"),
         ordering.alias("__ord"),
         payload.alias("__payload"),
     )
-    spine_stream = _non_null(spine, [f"__ek_{k}" for k in join_keys]).select(
+    spine_stream = spine.filter(
+        _all(F.col(f"__ek_{k}").isNotNull() for k in join_keys)
+    ).select(
         *[F.col(f"__ek_{k}") for k in join_keys],
         F.col("__ent_ts").alias("__ts"),
         F.lit(1).alias("__is_spine"),
@@ -322,44 +371,6 @@ def _union_window_latest(
         *[F.col(f"__ek_{k}") for k in join_keys],
         F.col("__ts").alias("__ent_ts"),
         F.col("__carry").alias("__payload"),
-    )
-
-
-def _static_join(
-    entity_df: DataFrame,
-    feature_df: DataFrame,
-    *,
-    join_keys: list[str],
-    features: list[str],
-    output_prefix: str = "",
-) -> DataFrame:
-    """Left equi-join a static (no event time) dimension view.
-
-    Extension beyond the reference (Feast views always carry event time);
-    small dims broadcast automatically via AQE.
-
-    One row per key comes from ``first`` over a struct of the features,
-    the aggregate Spark itself plans ``dropDuplicates`` as. Spelled out,
-    because a left join onto a ``dropDuplicates`` frame fails set
-    operations on the result (``exceptAll`` raises
-    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND).
-    """
-    feat = (
-        feature_df.groupBy(*[F.col(k).alias(f"__fk_{k}") for k in join_keys])
-        .agg(F.first(F.struct(*features)).alias("__fv"))
-        .select(
-            *[f"__fk_{k}" for k in join_keys],
-            *[F.col(f"__fv.`{f}`").alias(f"{output_prefix}{f}") for f in features],
-        )
-    )
-    cond = None
-    for k in join_keys:
-        c = entity_df[k] == feat[f"__fk_{k}"]
-        cond = c if cond is None else (cond & c)
-    out = entity_df.join(feat, cond, "left")
-    return out.select(
-        *[entity_df[c] for c in entity_df.columns],
-        *[feat[f"{output_prefix}{f}"] for f in features],
     )
 
 
@@ -449,16 +460,23 @@ def materialize_features(
 
     Mirrors the reference chain ``executor.py:76-87`` + the compiled SQL of
     ``executor.py:128-129``: resolve feature refs or a feature-service name
-    through the registry (P1/P2/P5), run the entity SQL (S1), then chain
-    one as-of join per referenced view onto the spine (J5 multi-view
-    composition — each view deduped independently, all LEFT onto the
-    spine). ``full_feature_names=True`` prefixes outputs ``view__feature``
-    (Feast's naming option; default unprefixed like the reference). Two
-    sources producing one output column raise :class:`RegistryError`.
+    through the registry (P1/P2/P5), run the entity SQL (S1), then attach
+    each referenced view in turn (J5 multi-view composition — each view
+    deduped independently, all LEFT onto the spine).
+    ``full_feature_names=True`` prefixes outputs ``view__feature`` (Feast's
+    naming option; default unprefixed like the reference). Two sources
+    producing one output column raise :class:`RegistryError`.
+
+    Temporal and static views take the same three steps as
+    :func:`point_in_time_join`: spine, newest payload per spine row, left
+    join back onto the running frame. A view's spine comes from the entity
+    frame when it holds all the view's keys, else from the running frame
+    (a view keyed on an earlier view's feature).
 
     Each distinct feature table (format, resolved path) is read once per
-    call and shared by every view over it. Each view's physical as-of
-    strategy comes from the measured decision rule above
+    call and shared by every view over it; each view normalizes the time
+    columns of its field-mapped frame here. Each temporal view's physical
+    as-of strategy comes from the measured decision rule above
     :func:`_select_strategy`, on a depth probe cached per (table, entity
     columns); all three strategies are oracle-equivalent — only the plan
     differs. The per-view choice is recorded in
@@ -492,37 +510,29 @@ def materialize_features(
                 f"entity dataframe lacks join key(s) {missing} for view "
                 f"{view_name!r}"
             )
+        # Derive this view's spine from the ENTITY frame whenever its keys
+        # live there (they almost always do; the exception is a view keyed
+        # on a feature produced by an earlier view). This keeps the logical
+        # tree, and query compile time, linear in the number of views
+        # instead of doubling per view: measured compile time for a
+        # 10-view chain was 6.3s spined on the running frame vs 0.9s on
+        # the entity frame. The physical plan is the same either way
+        # (outer-join elimination prunes the chained left joins out of the
+        # spine's distinct subtree).
+        keys = list(view.entities)
+        base = entity_df if all(k in entity_df.columns for k in keys) else out
+        strategy = "pair"  # a static view's latest step has no strategy
         if view.timestamp_col:
-            # Derive this view's spine/candidates from the ORIGINAL entity
-            # frame whenever its keys live there (they almost always do —
-            # the exception is a view keyed on a feature produced by an
-            # earlier view). Keeps the logical tree — and query compile
-            # time — linear in the number of views instead of doubling
-            # per level (see point_in_time_join docstring).
-            from_base = all(k in entity_df.columns for k in view.entities)
             strategy = _select_strategy(view, fdf, path)
             _LAST_STRATEGY_CHOICES[view_name] = strategy
-            out = point_in_time_join(
-                out,
-                fdf,
-                join_keys=list(view.entities),
-                entity_ts_col=entity_ts_col,
-                feature_ts_col=view.timestamp_col,
-                features=feats,
-                created_col=view.created_col,
-                ttl_seconds=view.ttl_seconds,
-                output_prefix=prefix,
-                strategy=strategy,
-                spine_source=entity_df if from_base else None,
-            )
-        else:
-            out = _static_join(
-                out,
-                fdf,
-                join_keys=list(view.entities),
-                features=feats,
-                output_prefix=prefix,
-            )
+        latest = _latest(
+            _spine(base, keys, entity_ts_col), fdf, join_keys=keys,
+            feature_ts_col=view.timestamp_col, features=feats,
+            created_col=view.created_col, ttl_seconds=view.ttl_seconds,
+            strategy=strategy,
+        )
+        ts = entity_ts_col if view.timestamp_col else None
+        out = _attach(out, latest, keys, ts, feats, prefix)
     return out
 
 

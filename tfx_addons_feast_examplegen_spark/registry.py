@@ -67,12 +67,12 @@ class FeatureView:
 
     def read(self, spark, sf_dir: str):
         """Load the physical table (format-dispatched; CSV/JSON get
-        header+schema inference — at scale, declare schemas instead)."""
+        header+schema inference — at scale, declare schemas instead).
+        Time columns come back as stored; ``materialize_features``
+        normalizes them."""
         path = self.resolve_path(sf_dir)
         if self.format == "parquet":
-            from .session import normalize_timestamps
-
-            return normalize_timestamps(spark.read.parquet(path))
+            return spark.read.parquet(path)
         if self.format == "csv":
             return spark.read.option("header", "true").option(
                 "inferSchema", "true"
@@ -115,9 +115,11 @@ class Registry:
 
     @classmethod
     def from_dict(cls, cfg: dict) -> "Registry":
-        """Build from a config mapping. An unknown key at any level, or a
-        missing required view or service key, raises ``RegistryError``
-        (a misspelt ``ttl_seconds`` would otherwise load as no TTL)."""
+        """Build from a config mapping. An unknown key at any level, a
+        missing required view or service key, or a view's ``entities`` or
+        ``features`` given as a bare string or an empty list raises
+        ``RegistryError`` (a misspelt ``ttl_seconds`` would otherwise load
+        as no TTL, and ``"user_id"`` as seven one-letter keys)."""
         unknown = sorted(set(cfg) - {"views", "services"})
         if unknown:
             raise RegistryError(
@@ -127,6 +129,12 @@ class Registry:
         views: dict[str, FeatureView] = {}
         for v in cfg.get("views", []):
             _check_keys("view", v, FeatureView)
+            for key in ("entities", "features"):
+                if isinstance(v[key], str) or not v[key]:
+                    raise RegistryError(
+                        f"view {v['name']!r}: {key!r} must be a non-empty "
+                        f"list, got {v[key]!r}"
+                    )
             fv = FeatureView(
                 name=v["name"],
                 path=v["path"],

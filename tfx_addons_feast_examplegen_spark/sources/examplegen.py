@@ -262,9 +262,7 @@ def generate_examples(
     entity_ts_col: str = "event_timestamp",
     params: dict[str, Any] | None = None,
     splits: list[tuple[str, int]] | None = None,
-    split_keys: list[str] | None = None,
     output_format: str = FORMAT_PARQUET,
-    seed: int = 42,
     emit_artifacts: bool = False,
     sequence_config: dict | None = None,
 ) -> DataFrame:
@@ -313,8 +311,7 @@ def generate_examples(
         entity_ts_col=entity_ts_col,
     )
 
-    keys = split_keys or df.columns
-    out = hash_split(df, keys, splits, seed=seed)
+    out = hash_split(df, df.columns, splits)
 
     if output_dir:
         if output_format == FORMAT_PARQUET:
@@ -347,7 +344,7 @@ def generate_examples(
             # The frame written, not the feature rows, carries the
             # on-disk split assignment, so it is the one returned.
             (bytes_col,) = encoded.columns
-            out = hash_split(encoded, [bytes_col], splits, seed=seed)
+            out = hash_split(encoded, [bytes_col], splits)
             write_partitioned_tfrecords(
                 out, output_dir, bytes_col=bytes_col, split_col="split"
             )
