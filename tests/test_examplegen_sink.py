@@ -1,6 +1,6 @@
 """ExampleGen sink layout: zstd parquet with INT64 timestamps and v2
-data pages, rows clustered by column within each task, and output bytes
-that do not change from run to run."""
+data pages, rows sorted within each file, and output bytes that change
+neither from run to run nor with the shuffle partition count."""
 
 import datetime as dt
 import glob
@@ -17,6 +17,7 @@ from tfx_addons_feast_examplegen_spark.sources.examplegen import (
     FORMAT_PARQUET,
     FORMAT_TF_EXAMPLE,
     _cluster,
+    _shard,
     generate_examples,
 )
 from tfx_addons_feast_examplegen_spark.sources.tfrecord import read_tfrecords
@@ -120,9 +121,6 @@ def test_parquet_sink_is_zstd_clustered_and_repeatable(spark, sf_dir, tmp_path):
 
 
 def test_tfrecord_shards_clustered_and_repeatable(spark, sf_dir, tmp_path):
-    cols = [c for c in _run(spark, sf_dir, None, FORMAT_TF_EXAMPLE).columns
-            if c != "split"]
-    assert cols[:2] == ["nation", "user_id"]
     runs = []
     for i in range(2):
         out = str(tmp_path / f"tf{i}")
@@ -131,16 +129,43 @@ def test_tfrecord_shards_clustered_and_repeatable(spark, sf_dir, tmp_path):
         assert files
         n = 0
         for f in files:
-            recs = [decode_example(r) for r in read_tfrecords(f)]
-            # (nation, user_id) is unique and decodes exactly, so it
-            # fixes the order of the whole record
-            rows = [(r["nation"][0], r["user_id"][0]) for r in recs]
-            assert _in_order(rows), f
-            n += len(rows)
+            recs = list(read_tfrecords(f))
+            # the sink sorts each shard by its record bytes
+            assert recs == sorted(recs), f
+            # (nation, user_id) is unique, so no two records are equal
+            keys = {(r["nation"][0], r["user_id"][0])
+                    for r in map(decode_example, recs)}
+            assert len(keys) == len(recs), f
+            n += len(recs)
         assert n == 150
         runs.append(_split_digests(out, "Split-*/*.tfrecord.gz"))
     assert set(runs[0]) == {"Split-train", "Split-eval"}
     assert runs[0] == runs[1]
+
+
+def test_sink_bytes_do_not_depend_on_shuffle_partitions(spark, sf_dir, tmp_path):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    layouts = (
+        (FORMAT_PARQUET, "split=*/*.parquet"),
+        (FORMAT_TF_EXAMPLE, "Split-*/*.tfrecord.gz"),
+    )
+    got = {}
+    try:
+        for parts in ("2", "4"):
+            spark.conf.set(key, parts)
+            for fmt, pattern in layouts:
+                out = str(tmp_path / f"{fmt}-{parts}")
+                _run(spark, sf_dir, out, fmt)
+                got[fmt, parts] = _split_digests(out, pattern)
+    finally:
+        spark.conf.set(key, before)
+    for fmt, _ in layouts:
+        digests = got[fmt, "2"]
+        # the fixture is far below one shard's input bytes
+        assert len(digests) == 2, digests
+        assert all(len(files) == 1 for files in digests.values()), digests
+        assert got[fmt, "4"] == digests, fmt
 
 
 def _exchanges(df):
@@ -152,6 +177,12 @@ def test_cluster_adds_no_exchange(spark, sf_dir):
     clustered = _cluster(out, "split")
     assert _exchanges(out) > 0
     assert _exchanges(clustered) == _exchanges(out)
+
+
+def test_shard_adds_one_exchange(spark, sf_dir):
+    out = _run(spark, sf_dir, None, FORMAT_PARQUET)
+    cols = [c for c in out.columns if c != "split"]
+    assert _exchanges(_shard(out, cols)) == _exchanges(out) + 1
 
 
 def test_orderable_skips_maps_and_variants_at_any_depth():

@@ -111,6 +111,22 @@ _VIEW = {
          r"view 'ev': 'entities' must be a non-empty list, got \[\]"),
         ({"views": [{**_VIEW, "features": []}]},
          r"view 'ev': 'features' must be a non-empty list, got \[\]"),
+        # a TTL the join cannot apply would fail only after its first jobs
+        ({"views": [{**_VIEW, "ttl_seconds": "7d"}]},
+         r"view 'ev': 'ttl_seconds' must be None or a non-negative int, "
+         r"got '7d'"),
+        ({"views": [{**_VIEW, "ttl_seconds": -1}]},
+         r"view 'ev': 'ttl_seconds' must be None or a non-negative int, "
+         r"got -1"),
+        ({"views": [{**_VIEW, "ttl_seconds": True}]},
+         r"view 'ev': 'ttl_seconds' must be None or a non-negative int, "
+         r"got True"),
+        ({"views": [{**_VIEW, "ttl_seconds": 0.5}]},
+         r"view 'ev': 'ttl_seconds' must be None or a non-negative int, "
+         r"got 0.5"),
+        ({"views": [{**_VIEW, "format": "delta"}]},
+         r"view 'ev': 'format' must be one of \['parquet', 'csv', 'json', "
+         r"'orc'\], got 'delta'"),
     ],
 )
 def test_from_dict_rejects_unknown_and_missing_keys(cfg, match):

@@ -40,6 +40,10 @@ class RegistryError(ValueError):
     """
 
 
+# The table formats ``FeatureView.read`` dispatches on.
+_FORMATS = ("parquet", "csv", "json", "orc")
+
+
 @dataclass(frozen=True)
 class FeatureView:
     """An event-time-versioned feature table.
@@ -116,10 +120,14 @@ class Registry:
     @classmethod
     def from_dict(cls, cfg: dict) -> "Registry":
         """Build from a config mapping. An unknown key at any level, a
-        missing required view or service key, or a view's ``entities`` or
-        ``features`` given as a bare string or an empty list raises
-        ``RegistryError`` (a misspelt ``ttl_seconds`` would otherwise load
-        as no TTL, and ``"user_id"`` as seven one-letter keys)."""
+        missing required view or service key, a view's ``entities`` or
+        ``features`` given as a bare string or an empty list, a
+        ``ttl_seconds`` that is not None or a non-negative int (a bool
+        included), or a ``format`` outside parquet, csv, json and orc
+        raises ``RegistryError`` naming the view and the key (a misspelt
+        ``ttl_seconds`` would otherwise load as no TTL, ``"user_id"`` as
+        seven one-letter keys, and ``ttl_seconds: "7d"`` would fail only
+        inside the join, after its first Spark jobs)."""
         unknown = sorted(set(cfg) - {"views", "services"})
         if unknown:
             raise RegistryError(
@@ -135,6 +143,17 @@ class Registry:
                         f"view {v['name']!r}: {key!r} must be a non-empty "
                         f"list, got {v[key]!r}"
                     )
+            ttl = v.get("ttl_seconds")
+            if ttl is not None and (type(ttl) is not int or ttl < 0):
+                raise RegistryError(
+                    f"view {v['name']!r}: 'ttl_seconds' must be None or a "
+                    f"non-negative int, got {ttl!r}"
+                )
+            if v.get("format", "parquet") not in _FORMATS:
+                raise RegistryError(
+                    f"view {v['name']!r}: 'format' must be one of "
+                    f"{list(_FORMATS)}, got {v['format']!r}"
+                )
             fv = FeatureView(
                 name=v["name"],
                 path=v["path"],

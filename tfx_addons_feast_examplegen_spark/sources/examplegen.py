@@ -20,10 +20,18 @@ it holds a null, and the per-row proto encode is the same per-row map the
 reference runs in ``beam.Map`` at ``executor.py:156-160``, but batched.
 Everything upstream of the encode is pure DataFrame — Catalyst-optimized,
 shuffle-minimal.
+
+Both sinks write through ``_shard``: one hash shuffle into
+``ceil(input bytes / 128 MiB)`` shards (one per input file when an input
+is not on the local filesystem), never a count taken from the cores or
+``spark.sql.shuffle.partitions``, then a sort of each shard by split and
+every orderable column. Each shard writes one file per split it holds,
+and a file's bytes depend only on the input, not on the host.
 """
 
 from __future__ import annotations
 
+import os
 import re
 from collections.abc import Iterator
 from typing import Any
@@ -44,7 +52,7 @@ from ..functions.tfexample import encode_example, encode_sequence_example
 from ..operators.pit_join import materialize_features
 from ..operators.split import hash_split
 from ..registry import Registry, RegistryError
-from .tfrecord import write_partitioned_tfrecords
+from .tfrecord import _local_path, write_partitioned_tfrecords
 
 # Output-format enum, mirroring the reference's dispatch values
 # (executor.py:142-153: FORMAT_TF_EXAMPLE / FORMAT_TF_SEQUENCE_EXAMPLE).
@@ -149,6 +157,11 @@ def _orderable(dt: DataType) -> bool:
     return not isinstance(dt, (MapType, VariantType, CalendarIntervalType))
 
 
+def _col(name: str):
+    """A column by its literal name, dots and backticks included."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def _cluster(df: DataFrame, *lead: str) -> DataFrame:
     """Sort each partition by ``lead``, then by every orderable column in
     frame order.
@@ -162,9 +175,42 @@ def _cluster(df: DataFrame, *lead: str) -> DataFrame:
         f.name for f in df.schema.fields
         if f.name not in lead and _orderable(f.dataType)
     ]
-    return df.sortWithinPartitions(
-        *[F.col("`" + c.replace("`", "``") + "`") for c in (*lead, *rest)]
-    )
+    return df.sortWithinPartitions(*[_col(c) for c in (*lead, *rest)])
+
+
+# Input bytes per output shard. A constant, so the file layout depends on
+# the input alone.
+_SHARD_BYTES = 128 * 1024 * 1024
+
+
+def _shard_count(df: DataFrame) -> int:
+    """``ceil(Σ input file sizes / _SHARD_BYTES)``, at least 1; one shard
+    per input file when any input is not on the local filesystem."""
+    from urllib.parse import unquote
+
+    files = df.inputFiles()
+    total = 0
+    for uri in files:
+        # inputFiles() gives percent-encoded URIs ("a b" -> "a%20b")
+        path = _local_path(uri)
+        path = path and unquote(path)
+        if not path or not os.path.isfile(path):
+            return len(files)
+        total += os.path.getsize(path)
+    return max(1, -(-total // _SHARD_BYTES))
+
+
+def _shard(frame: DataFrame, cols: list[str]) -> DataFrame:
+    """The sink layout: hash-partition ``frame`` on ``cols`` into
+    ``_shard_count`` shards, then sort each shard by ``split`` and every
+    orderable column (``_cluster``).
+
+    One shuffle. Its count is explicit, so AQE does not coalesce it, and
+    Spark's Murmur3 hash of ``cols`` picks each row's shard, so which rows
+    share a file depends only on the rows and the input size.
+    """
+    n = _shard_count(frame)
+    return _cluster(frame.repartition(n, *[_col(c) for c in cols]), "split")
 
 
 def encode_examples(df: DataFrame) -> DataFrame:
@@ -184,11 +230,10 @@ def encode_examples(df: DataFrame) -> DataFrame:
     dominates this stage spreads across the cluster instead of
     serializing onto one core (file-size split estimate, no plan->RDD
     probe; at production scale the scan already splits wider and it is
-    a no-op). Each task then sorts its rows by every orderable column in
-    frame order (``_cluster``), so records come out in column order
-    within each task, not in the input order; gzipped shards of sorted
-    records are smaller. Record bytes do not depend on the order, and
-    splits hash the serialized bytes.
+    a no-op). Records come out in no set order; ``generate_examples``'s
+    sink shuffles them into shards and sorts each shard by its record
+    bytes. Record bytes do not depend on the order, and splits hash the
+    serialized bytes.
     """
     from ..session import rebalance_for_compute
 
@@ -199,9 +244,7 @@ def encode_examples(df: DataFrame) -> DataFrame:
                 {"example": pa.array(recs, pa.binary())}
             )
 
-    return _cluster(rebalance_for_compute(df)).mapInArrow(
-        _encode, schema="example binary"
-    )
+    return rebalance_for_compute(df).mapInArrow(_encode, schema="example binary")
 
 
 def encode_sequence_examples(
@@ -272,13 +315,21 @@ def generate_examples(
     split is the hash of the serialized record, matching the files on
     disk).
 
-    When ``output_dir`` is set the result is also written out:
+    When ``output_dir`` is set the result is also written out, in
+    ``ceil(input bytes / 128 MiB)`` shards (one per input file when an
+    input is not on the local filesystem) with one file per split per
+    shard, so small inputs give one file per split. Rows go to shards by
+    hash (of the feature columns for parquet, of the record bytes for
+    TFRecords) and each file is sorted at the sink, so the files' bytes
+    do not depend on cores or ``spark.sql.shuffle.partitions`` (the
+    returned frame is neither sharded nor sorted):
     ``FORMAT_PARQUET`` -> zstd parquet partitioned by split, each file's
-    rows sorted by every orderable column in frame order (the returned
-    frame is not sorted), written with v2 data pages (delta encodings;
-    readers need Spark >= 3.3 or pyarrow) and, under ``get_spark``'s
-    session, INT64 microsecond UTC timestamps;
-    ``FORMAT_TF_EXAMPLE`` -> gzipped TFRecords under ``Split-{name}/``;
+    rows sorted by every orderable column in frame order, written with
+    v2 data pages (delta encodings; readers need Spark >= 3.3 or
+    pyarrow) and, under ``get_spark``'s session, INT64 microsecond UTC
+    timestamps;
+    ``FORMAT_TF_EXAMPLE`` -> gzipped TFRecords under ``Split-{name}/``,
+    each file's records in ascending byte order;
     ``FORMAT_TF_SEQUENCE_EXAMPLE`` -> NotImplementedError (reference
     parity: converters.py:55-57);
     ``FORMAT_TF_SEQUENCE_EXAMPLE_FULL`` (beyond-parity) -> per-key
@@ -315,12 +366,12 @@ def generate_examples(
 
     if output_dir:
         if output_format == FORMAT_PARQUET:
-            # Clustering on split first also meets partitionBy's ordering,
-            # so the writer adds no sort of its own; zstd and v2 data
-            # pages (delta encodings) on this writer only, not
-            # session-wide.
+            # Shards hash the columns hash_split hashes. Sorting on split
+            # first also meets partitionBy's ordering, so the writer adds
+            # no sort of its own; zstd and v2 data pages (delta
+            # encodings) on this writer only, not session-wide.
             (
-                _cluster(out, "split")
+                _shard(out, df.columns)
                 .write.mode("overwrite")
                 .option("compression", "zstd")
                 .option("parquet.writer.version", "v2")
@@ -346,7 +397,8 @@ def generate_examples(
             (bytes_col,) = encoded.columns
             out = hash_split(encoded, [bytes_col], splits)
             write_partitioned_tfrecords(
-                out, output_dir, bytes_col=bytes_col, split_col="split"
+                _shard(out, [bytes_col]), output_dir,
+                bytes_col=bytes_col, split_col="split",
             )
         if emit_artifacts:
             # The reference's usage sketch declares statistics + schema
@@ -354,14 +406,13 @@ def generate_examples(
             # Written AFTER the data sink: mode("overwrite") clears the
             # output directory.
             import json as _json
-            import os as _os
 
             from ..operators.stats import column_stats, schema_artifact
 
-            _os.makedirs(output_dir, exist_ok=True)
+            os.makedirs(output_dir, exist_ok=True)
             stats_rows = [r.asDict() for r in column_stats(df).collect()]
-            with open(_os.path.join(output_dir, "statistics.json"), "w") as f:
+            with open(os.path.join(output_dir, "statistics.json"), "w") as f:
                 _json.dump(stats_rows, f, indent=2, default=str)
-            with open(_os.path.join(output_dir, "schema.json"), "w") as f:
+            with open(os.path.join(output_dir, "schema.json"), "w") as f:
                 f.write(schema_artifact(df))
     return out

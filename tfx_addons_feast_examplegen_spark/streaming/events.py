@@ -150,14 +150,17 @@ def stream_examples_to_tfrecords(
     batch replayed after a crash (restart between the write and the
     checkpoint commit) overwrites exactly its own shards — idempotent
     per micro-batch, which together with the checkpoint gives
-    effectively-once output.
+    effectively-once output. Each shard's records are sorted by split,
+    then bytes, with no shuffle.
     """
     from ..operators.split import hash_split
-    from ..sources.examplegen import encode_examples
+    from ..sources.examplegen import _cluster, encode_examples
     from ..sources.tfrecord import write_partitioned_tfrecords
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        encoded = hash_split(encode_examples(batch_df), ["example"])
+        encoded = _cluster(
+            hash_split(encode_examples(batch_df), ["example"]), "split"
+        )
         write_partitioned_tfrecords(
             encoded,
             out_dir,
