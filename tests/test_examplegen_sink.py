@@ -9,10 +9,12 @@ import json
 import os
 
 import pyarrow.parquet as pq
+import pytest
 
 from tfx_addons_feast_examplegen_spark.functions.tfexample import decode_example
 from tfx_addons_feast_examplegen_spark.registry import testdata_registry as _registry
 from tfx_addons_feast_examplegen_spark.session import register_tables
+from tfx_addons_feast_examplegen_spark.sources import examplegen
 from tfx_addons_feast_examplegen_spark.sources.examplegen import (
     FORMAT_PARQUET,
     FORMAT_TF_EXAMPLE,
@@ -143,15 +145,31 @@ def test_tfrecord_shards_clustered_and_repeatable(spark, sf_dir, tmp_path):
     assert runs[0] == runs[1]
 
 
-def test_sink_bytes_do_not_depend_on_shuffle_partitions(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("shards", [1, 3])
+def test_sink_bytes_do_not_depend_on_shuffle_partitions(
+    spark, sf_dir, tmp_path, monkeypatch, shards
+):
+    register_tables(spark, sf_dir)
+    entity = spark.table("customer")  # the only table _QUERY reads
+    if shards > 1:
+        # the fixture is far below one shard's input bytes: shrink the
+        # shard so the entity input spans exactly ``shards`` of them
+        monkeypatch.setattr(examplegen, "_SHARD_BYTES", 1)
+        size = examplegen._shard_count(entity)
+        monkeypatch.setattr(examplegen, "_SHARD_BYTES", -(-size // shards))
+    assert examplegen._shard_count(entity) == shards
     key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = {k: spark.conf.get(k) for k in (key, coalesce)}
     layouts = (
         (FORMAT_PARQUET, "split=*/*.parquet"),
         (FORMAT_TF_EXAMPLE, "Split-*/*.tfrecord.gz"),
     )
     got = {}
     try:
+        # uncoalesced, a sink that followed the partition count would
+        # write one file per partition
+        spark.conf.set(coalesce, "false")
         for parts in ("2", "4"):
             spark.conf.set(key, parts)
             for fmt, pattern in layouts:
@@ -159,13 +177,26 @@ def test_sink_bytes_do_not_depend_on_shuffle_partitions(spark, sf_dir, tmp_path)
                 _run(spark, sf_dir, out, fmt)
                 got[fmt, parts] = _split_digests(out, pattern)
     finally:
-        spark.conf.set(key, before)
+        for k, v in before.items():
+            spark.conf.set(k, v)
     for fmt, _ in layouts:
         digests = got[fmt, "2"]
-        # the fixture is far below one shard's input bytes
         assert len(digests) == 2, digests
-        assert all(len(files) == 1 for files in digests.values()), digests
+        # one file per split per shard: 150 rows leave no shard empty
+        assert all(len(files) == shards for files in digests.values()), digests
         assert got[fmt, "4"] == digests, fmt
+
+
+def test_shard_count_sums_input_file_sizes(spark, tmp_path, monkeypatch):
+    # inputFiles() gives percent-encoded URIs ("a b" -> "a%20b")
+    out = str(tmp_path / "a b")
+    spark.range(1000).repartition(3).write.parquet(out)
+    files = glob.glob(os.path.join(out, "*.parquet"))
+    assert len(files) == 3
+    monkeypatch.setattr(examplegen, "_SHARD_BYTES", 1)
+    df = spark.read.parquet(out)
+    assert examplegen._shard_count(df) == sum(map(os.path.getsize, files))
+    assert examplegen._shard_count(spark.range(3)) == 1  # no input files
 
 
 def _exchanges(df):
@@ -182,7 +213,7 @@ def test_cluster_adds_no_exchange(spark, sf_dir):
 def test_shard_adds_one_exchange(spark, sf_dir):
     out = _run(spark, sf_dir, None, FORMAT_PARQUET)
     cols = [c for c in out.columns if c != "split"]
-    assert _exchanges(_shard(out, cols)) == _exchanges(out) + 1
+    assert _exchanges(_shard(out, cols, 2)) == _exchanges(out) + 1
 
 
 def test_orderable_skips_maps_and_variants_at_any_depth():

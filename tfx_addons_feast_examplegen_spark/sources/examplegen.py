@@ -22,11 +22,11 @@ Everything upstream of the encode is pure DataFrame — Catalyst-optimized,
 shuffle-minimal.
 
 Both sinks write through ``_shard``: one hash shuffle into
-``ceil(input bytes / 128 MiB)`` shards (one per input file when an input
-is not on the local filesystem), never a count taken from the cores or
-``spark.sql.shuffle.partitions``, then a sort of each shard by split and
-every orderable column. Each shard writes one file per split it holds,
-and a file's bytes depend only on the input, not on the host.
+``ceil(entity query input bytes / 128 MiB)`` shards, never a count taken
+from the cores or ``spark.sql.shuffle.partitions``, then a sort of each
+shard by split and every orderable column. Each shard writes one file
+per split it holds, and a file's bytes depend only on the input, not on
+the host.
 """
 
 from __future__ import annotations
@@ -52,7 +52,7 @@ from ..functions.tfexample import encode_example, encode_sequence_example
 from ..operators.pit_join import materialize_features
 from ..operators.split import hash_split
 from ..registry import Registry, RegistryError
-from .tfrecord import _local_path, write_partitioned_tfrecords
+from .tfrecord import write_partitioned_tfrecords
 
 # Output-format enum, mirroring the reference's dispatch values
 # (executor.py:142-153: FORMAT_TF_EXAMPLE / FORMAT_TF_SEQUENCE_EXAMPLE).
@@ -184,32 +184,29 @@ _SHARD_BYTES = 128 * 1024 * 1024
 
 
 def _shard_count(df: DataFrame) -> int:
-    """``ceil(Σ input file sizes / _SHARD_BYTES)``, at least 1; one shard
-    per input file when any input is not on the local filesystem."""
-    from urllib.parse import unquote
+    """``ceil(Σ sizes of df.inputFiles() / _SHARD_BYTES)``, at least 1.
 
-    files = df.inputFiles()
+    Each size comes from the session's Hadoop filesystem, so local and
+    remote inputs are sized alike, and the percent-encoded URIs
+    ``inputFiles()`` returns are decoded there."""
+    jvm = df.sparkSession._jvm
+    conf = df.sparkSession._jsc.hadoopConfiguration()
     total = 0
-    for uri in files:
-        # inputFiles() gives percent-encoded URIs ("a b" -> "a%20b")
-        path = _local_path(uri)
-        path = path and unquote(path)
-        if not path or not os.path.isfile(path):
-            return len(files)
-        total += os.path.getsize(path)
+    for uri in df.inputFiles():
+        path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(uri))
+        total += path.getFileSystem(conf).getFileStatus(path).getLen()
     return max(1, -(-total // _SHARD_BYTES))
 
 
-def _shard(frame: DataFrame, cols: list[str]) -> DataFrame:
-    """The sink layout: hash-partition ``frame`` on ``cols`` into
-    ``_shard_count`` shards, then sort each shard by ``split`` and every
-    orderable column (``_cluster``).
+def _shard(frame: DataFrame, cols: list[str], n: int) -> DataFrame:
+    """The sink layout: hash-partition ``frame`` on ``cols`` into ``n``
+    shards, then sort each shard by ``split`` and every orderable column
+    (``_cluster``).
 
     One shuffle. Its count is explicit, so AQE does not coalesce it, and
     Spark's Murmur3 hash of ``cols`` picks each row's shard, so which rows
-    share a file depends only on the rows and the input size.
+    share a file depends only on the rows and ``n``.
     """
-    n = _shard_count(frame)
     return _cluster(frame.repartition(n, *[_col(c) for c in cols]), "split")
 
 
@@ -316,9 +313,10 @@ def generate_examples(
     disk).
 
     When ``output_dir`` is set the result is also written out, in
-    ``ceil(input bytes / 128 MiB)`` shards (one per input file when an
-    input is not on the local filesystem) with one file per split per
-    shard, so small inputs give one file per split. Rows go to shards by
+    ``ceil(B / 128 MiB)`` shards, ``B`` the bytes of the files the entity
+    query reads (the feature tables' history is not counted: the output
+    has one row per entity row), with one file per split per shard, so
+    small entity inputs give one file per split. Rows go to shards by
     hash (of the feature columns for parquet, of the record bytes for
     TFRecords) and each file is sorted at the sink, so the files' bytes
     do not depend on cores or ``spark.sql.shuffle.partitions`` (the
@@ -352,10 +350,10 @@ def generate_examples(
             "{'key_cols', 'order_col', 'sequence_cols'}"
         )
 
-    query = substitute_params(entity_query, params)
+    entity = spark.sql(substitute_params(entity_query, params))
     df = materialize_features(
         spark,
-        entity_query=query,
+        entity_query=entity,
         features=features,
         registry=registry,
         sf_dir=sf_dir,
@@ -365,13 +363,16 @@ def generate_examples(
     out = hash_split(df, df.columns, splits)
 
     if output_dir:
+        # One output row per entity row: size the shards by the entity
+        # query's input, not by the feature tables' history it joins.
+        shards = _shard_count(entity)
         if output_format == FORMAT_PARQUET:
             # Shards hash the columns hash_split hashes. Sorting on split
             # first also meets partitionBy's ordering, so the writer adds
             # no sort of its own; zstd and v2 data pages (delta
             # encodings) on this writer only, not session-wide.
             (
-                _shard(out, df.columns)
+                _shard(out, df.columns, shards)
                 .write.mode("overwrite")
                 .option("compression", "zstd")
                 .option("parquet.writer.version", "v2")
@@ -397,7 +398,7 @@ def generate_examples(
             (bytes_col,) = encoded.columns
             out = hash_split(encoded, [bytes_col], splits)
             write_partitioned_tfrecords(
-                _shard(out, [bytes_col]), output_dir,
+                _shard(out, [bytes_col], shards), output_dir,
                 bytes_col=bytes_col, split_col="split",
             )
         if emit_artifacts:
