@@ -1,6 +1,7 @@
 """ExampleGen sink layout: zstd parquet with INT64 timestamps and v2
-data pages, rows sorted within each file, and output bytes that change
-neither from run to run nor with the shuffle partition count."""
+data pages, rows sorted within each file, output bytes (and TFRecord file
+names) that change neither from run to run nor with the shuffle partition
+count, and one shuffle from the join to the TFRecord file."""
 
 import datetime as dt
 import glob
@@ -12,6 +13,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from tfx_addons_feast_examplegen_spark.functions.tfexample import decode_example
+from tfx_addons_feast_examplegen_spark.operators.split import hash_split
 from tfx_addons_feast_examplegen_spark.registry import testdata_registry as _registry
 from tfx_addons_feast_examplegen_spark.session import register_tables
 from tfx_addons_feast_examplegen_spark.sources import examplegen
@@ -20,6 +22,7 @@ from tfx_addons_feast_examplegen_spark.sources.examplegen import (
     FORMAT_TF_EXAMPLE,
     _cluster,
     _shard,
+    encode_examples,
     generate_examples,
 )
 from tfx_addons_feast_examplegen_spark.sources.tfrecord import read_tfrecords
@@ -166,6 +169,7 @@ def test_sink_bytes_do_not_depend_on_shuffle_partitions(
         (FORMAT_TF_EXAMPLE, "Split-*/*.tfrecord.gz"),
     )
     got = {}
+    names = {}
     try:
         # uncoalesced, a sink that followed the partition count would
         # write one file per partition
@@ -176,6 +180,12 @@ def test_sink_bytes_do_not_depend_on_shuffle_partitions(
                 out = str(tmp_path / f"{fmt}-{parts}")
                 _run(spark, sf_dir, out, fmt)
                 got[fmt, parts] = _split_digests(out, pattern)
+            out = str(tmp_path / f"{FORMAT_TF_EXAMPLE}-{parts}")
+            names[parts] = sorted(
+                f"{d}/{f}"
+                for d in os.listdir(out)
+                for f in os.listdir(os.path.join(out, d))
+            )
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)
@@ -185,6 +195,12 @@ def test_sink_bytes_do_not_depend_on_shuffle_partitions(
         # one file per split per shard: 150 rows leave no shard empty
         assert all(len(files) == shards for files in digests.values()), digests
         assert got[fmt, "4"] == digests, fmt
+    # TFRecord files are named by shard (parquet names carry a job
+    # uuid), and no temp file is left
+    assert names["4"] == names["2"] == sorted(
+        f"Split-{s}/part-{i:05d}.tfrecord.gz"
+        for s in ("eval", "train") for i in range(shards)
+    )
 
 
 def test_shard_count_sums_input_file_sizes(spark, tmp_path, monkeypatch):
@@ -214,6 +230,33 @@ def test_shard_adds_one_exchange(spark, sf_dir):
     out = _run(spark, sf_dir, None, FORMAT_PARQUET)
     cols = [c for c in out.columns if c != "split"]
     assert _exchanges(_shard(out, cols, 2)) == _exchanges(out) + 1
+
+
+def test_tfrecord_sink_adds_only_the_shard_exchange(spark, sf_dir):
+    # the encode runs where the join leaves its rows: from the join to
+    # the TFRecord file, the shard is the only shuffle
+    features = _run(spark, sf_dir, None, FORMAT_PARQUET).drop("split")
+    encoded = hash_split(encode_examples(features), ["example"])
+    assert _exchanges(encoded) == _exchanges(features)
+    assert _exchanges(_shard(encoded, ["example"], 2)) == _exchanges(features) + 1
+
+
+def test_tfrecord_sink_under_a_unit_suffixed_max_partition_bytes(
+    spark, sf_dir, tmp_path
+):
+    # "64m" is a valid size for this conf; the sink must not parse it
+    # as a plain byte count
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    out = str(tmp_path / "tf")
+    try:
+        spark.conf.set(key, "64m")
+        _run(spark, sf_dir, out, FORMAT_TF_EXAMPLE)
+    finally:
+        spark.conf.set(key, before)
+    n = sum(1 for f in glob.glob(os.path.join(out, "Split-*", "*.tfrecord.gz"))
+            for _ in read_tfrecords(f))
+    assert n == 150
 
 
 def test_orderable_skips_maps_and_variants_at_any_depth():

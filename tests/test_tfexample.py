@@ -304,6 +304,80 @@ def test_partitioned_tfrecords_is_one_job(spark, tmp_path):
     assert sorted(os.listdir(out_dir)) == ["Split-eval", "Split-train"]
 
 
+# Runs in its own process: the test session allows no task retries.
+# Partition 0's first attempt dies about 50k rows in, after the writer
+# has framed some of them; local[2,2] retries it once.
+_RETRY_PROBE = r"""
+import sys
+
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+
+from tfx_addons_feast_examplegen_spark.sources.tfrecord import (
+    write_partitioned_tfrecords,
+)
+
+
+def fail_once(batches):
+    ctx = TaskContext.get()
+    seen = 0
+    for batch in batches:
+        seen += batch.num_rows
+        if ctx.partitionId() == 0 and ctx.attemptNumber() == 0 and seen > 50_000:
+            raise RuntimeError("injected task failure")
+        yield batch
+
+
+spark = (
+    SparkSession.builder.master("local[2,2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "512m")
+    .getOrCreate()
+)
+df = spark.range(0, 200_000, 1, 2).mapInArrow(fail_once, "id long").selectExpr(
+    "cast(cast(id AS string) AS binary) AS example",
+    "if(id % 3 = 0, 'eval', 'train') AS split",
+)
+write_partitioned_tfrecords(df, sys.argv[1], split_col="split")
+spark.stop()
+"""
+
+
+def test_partitioned_tfrecords_retried_task_leaves_no_duplicate(tmp_path):
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out_dir = str(tmp_path / "retried")
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_PROBE, out_dir],
+        env=env, cwd=str(tmp_path), capture_output=True, text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    # the failure happened and was retried
+    assert "injected task failure" in proc.stderr
+    # one file per (split, partition), no temp file left
+    assert {
+        d: sorted(os.listdir(os.path.join(out_dir, d)))
+        for d in os.listdir(out_dir)
+    } == {
+        d: ["part-00000.tfrecord.gz", "part-00001.tfrecord.gz"]
+        for d in ("Split-eval", "Split-train")
+    }
+    recs = [
+        r
+        for f in glob.glob(os.path.join(out_dir, "Split-*", "*.tfrecord.gz"))
+        for r in read_tfrecords(f)
+    ]
+    assert len(recs) == 200_000
+    assert sorted(recs) == sorted(str(i).encode() for i in range(200_000))
+
+
 def test_partitioned_tfrecords_streams_large_partition(spark, tmp_path):
     # One partition, many records: the writer must stream to the open
     # handle (not buffer the partition in a list). Verified behaviorally:
@@ -923,25 +997,6 @@ def test_read_varint_truncates_to_64_bits():
 
     # canonical -1 (ten 0xFF.. bytes ending 0x01) still decodes to -1
     assert _read_varint(b"\xff" * 9 + b"\x01", 0) == (-1, 10)
-
-
-def test_encode_examples_floors_task_count(spark, tmp_path):
-    # A narrow input (a single small file scanning as ONE split) must
-    # fan out before the per-row proto encode, or one core serializes
-    # the stage's dominant CPU cost.
-    from tfx_addons_feast_examplegen_spark.sources.examplegen import (
-        encode_examples,
-    )
-
-    p = str(tmp_path / "narrow.parquet")
-    spark.range(0, 1000, 1, 1).withColumnRenamed("id", "k").write.parquet(p)
-    df = spark.read.parquet(p)
-    assert df.rdd.getNumPartitions() == 1
-    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-
-    out = encode_examples(df)
-    assert out.columns == ["example"]
-    assert out.rdd.getNumPartitions() >= min(target, 1000)
 
 
 def test_encode_examples_keeps_int_kind_nan_and_int64(spark):

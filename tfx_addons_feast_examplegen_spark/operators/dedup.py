@@ -8,16 +8,13 @@ Operators:
 
 - :func:`exact_dedup` — content-hash group-by, keep one deterministic
   representative per group. One shuffle on the content key.
-- :func:`content_fingerprint` — md5 fingerprint column (engine-portable,
-  so an external SQL oracle can reproduce it byte-for-byte).
 - :func:`jaccard_pairs` — exact word-n-gram Jaccard similarity pairs via
   shingle explode + self-equi-join on shingle. The verifier of record for
   near-dup candidates.
-- :func:`minhash_signatures` / :func:`minhash_lsh_pairs` — MinHash + LSH
-  banding: the 100 TB path. Signatures are 64 universal-hash mins computed
-  as columnar aggregates (no UDF); banding turns O(n²) pair search into
-  an equi-join on (band_id, band_hash); exact Jaccard then verifies only
-  the candidates.
+- :func:`minhash_lsh_pairs` — MinHash + LSH banding: the 100 TB path.
+  Signatures are 64 universal-hash mins computed as columnar aggregates
+  (no UDF); banding turns O(n²) pair search into an equi-join on
+  (band_id, band_hash); exact Jaccard then verifies only the candidates.
 - :func:`simhash` / :func:`simhash_pairs` — 64-bit SimHash with
   Hamming-distance candidate join on 16-bit chunks (a Hamming-ball
   pigeonhole join: distance <= 3 implies at least one of 4 chunks equal).
@@ -72,18 +69,6 @@ def _pin(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
-
-
-def content_fingerprint(
-    df: DataFrame, cols: list[str], out_col: str = "fingerprint"
-) -> DataFrame:
-    """md5 fingerprint of the concatenated (unit-separated) columns.
-
-    md5 rather than xxhash64 so external engines can reproduce it; for
-    pure-Spark pipelines xxhash64 is cheaper (see hash_split).
-    """
-    concat = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in cols])
-    return df.withColumn(out_col, F.md5(concat))
 
 
 def exact_dedup(
@@ -910,32 +895,6 @@ def _hash_array_expr(num_hashes: int, seed: int) -> "F.Column":
         f"transform(array({params}), p -> "
         f"pmod(pmod(shingle, {_MERSENNE}) * p[0] + p[1], {_MERSENNE}))"
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    n: int = 3,
-    num_hashes: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signature per document: (id, sig array<long>).
-
-    Universal hash family h_i(x) = (a_i*x + b_i) mod (2^31-1) over a
-    31-bit fold of xxhash64(shingle); each signature slot is a plain
-    ``min`` aggregate — map-side combinable, one shuffle on doc id, no
-    UDFs. num_hashes=64 keeps the signature a single cache line pair.
-    """
-    sh = shingles(df, id_col, text_col, n, hashed=True)
-    hashed = sh.select(
-        F.col(id_col), _hash_array_expr(num_hashes, seed).alias("__h")
-    )
-    mins = [F.expr(f"min(__h[{i}]) AS __m{i}") for i in range(num_hashes)]
-    out = hashed.groupBy(id_col).agg(*mins)
-    arr = ", ".join(f"__m{i}" for i in range(num_hashes))
-    return out.select(F.col(id_col), F.expr(f"array({arr}) AS sig"))
 
 
 def _minhash_sigs(

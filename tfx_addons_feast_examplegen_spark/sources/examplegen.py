@@ -25,8 +25,10 @@ Both sinks write through ``_shard``: one hash shuffle into
 ``ceil(entity query input bytes / 128 MiB)`` shards, never a count taken
 from the cores or ``spark.sql.shuffle.partitions``, then a sort of each
 shard by split and every orderable column. Each shard writes one file
-per split it holds, and a file's bytes depend only on the input, not on
-the host.
+per split it holds, and a file's bytes (a TFRecord file's name too)
+depend only on the input, not on the host. The tf.Example encode adds
+no shuffle of its own, so ``_shard``'s is the only one between the join
+and the file.
 """
 
 from __future__ import annotations
@@ -221,18 +223,13 @@ def encode_examples(df: DataFrame) -> DataFrame:
     feature, never a float), int64 values are exact, and a NaN double is
     float_list ``[nan]``.
 
-    A narrow input (e.g. one small parquet file scanning as a single
-    split) is round-robin repartitioned by ``rebalance_for_compute``
-    BEFORE the per-row proto encode, so the Python-side CPU work that
-    dominates this stage spreads across the cluster instead of
-    serializing onto one core (file-size split estimate, no plan->RDD
-    probe; at production scale the scan already splits wider and it is
-    a no-op). Records come out in no set order; ``generate_examples``'s
-    sink shuffles them into shards and sorts each shard by its record
-    bytes. Record bytes do not depend on the order, and splits hash the
+    The encode adds no shuffle: it runs in ``df``'s own partitions,
+    which for ``generate_examples`` are those the join's last shuffle
+    left. Records come out in no set order; ``generate_examples``'s sink
+    shuffles them into shards and sorts each shard by its record bytes.
+    Record bytes do not depend on the order, and splits hash the
     serialized bytes.
     """
-    from ..session import rebalance_for_compute
 
     def _encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -241,7 +238,7 @@ def encode_examples(df: DataFrame) -> DataFrame:
                 {"example": pa.array(recs, pa.binary())}
             )
 
-    return rebalance_for_compute(df).mapInArrow(_encode, schema="example binary")
+    return df.mapInArrow(_encode, schema="example binary")
 
 
 def encode_sequence_examples(
@@ -327,7 +324,11 @@ def generate_examples(
     pyarrow) and, under ``get_spark``'s session, INT64 microsecond UTC
     timestamps;
     ``FORMAT_TF_EXAMPLE`` -> gzipped TFRecords under ``Split-{name}/``,
-    each file's records in ascending byte order;
+    one ``part-{shard:05d}.tfrecord.gz`` per split per shard, each
+    file's records in ascending byte order (a retried task replaces its
+    shard's file, never adds one); the encode runs in the partitions the
+    join leaves, so the shard shuffle is the only one between the join
+    and the file;
     ``FORMAT_TF_SEQUENCE_EXAMPLE`` -> NotImplementedError (reference
     parity: converters.py:55-57);
     ``FORMAT_TF_SEQUENCE_EXAMPLE_FULL`` (beyond-parity) -> per-key

@@ -14,7 +14,8 @@ crc32c (Castagnoli) is implemented with a precomputed table; the mask is
 One writer, :func:`write_partitioned_tfrecords`: a single
 ``foreachPartition`` pass on executors — embarrassingly parallel, no
 shuffle, no driver-side probe job, one gzipped file per partition per
-split (the same layout a FileFormat sink would produce). This is
+split, named by the partition and renamed into place when the task is
+done (the same layout and commit a FileFormat sink would produce). This is
 imperative I/O at the serialization edge, the one place the SURVEY
 sanctions mapPartitions-style code.
 
@@ -33,7 +34,6 @@ import contextlib
 import gzip
 import os
 import struct
-import uuid
 
 _CRC_TABLE = []
 _POLY = 0x82F63B78  # Castagnoli, reflected
@@ -351,19 +351,26 @@ def write_partitioned_tfrecords(
 
     ``bytes_df``: DataFrame with a binary column (and optionally a split
     column). One pass, one Spark job: each task streams its partition's
-    records into one open ``{file_prefix}-<uuid>.tfrecord.gz`` per split
-    it sees, creating that split's directory on first use — O(1)
-    executor memory per handle regardless of partition size, no
+    records into one open ``{file_prefix}-{partition:05d}.tfrecord.gz``
+    per split it sees, creating that split's directory on first use —
+    O(1) executor memory per handle regardless of partition size, no
     shuffle — mirroring the reference's per-split gzipped TFRecord dirs
     (``executor.py:163,181,186-188`` [delegated]). A split with no rows
-    gets no directory.
+    gets no directory. A file's name comes from its partition, so it
+    depends only on the input's partitioning, not on the run.
+
+    Each attempt writes under a hidden, attempt-unique temp name
+    (``.{name}.{attempt}.tmp``) and renames it into place with
+    ``os.replace`` once the partition is done, after removing the temp
+    files an earlier attempt at the same partition left. So a retried
+    task replaces its partition's files: a failed attempt leaves neither
+    a partial file nor a duplicate of the retry's records.
 
     ``mode="overwrite"`` (default): re-running into the same ``out_dir``
     replaces the previous dataset — stale ``Split-*/`` dirs and
     ``*.tfrecord*`` files are cleared first (the parquet path gets this
-    from ``mode("overwrite")``; without it, uuid-named part files from
-    consecutive runs would silently accumulate and duplicate the
-    dataset).
+    from ``mode("overwrite")``; without it, part files of an earlier run
+    that wrote more partitions would stay and duplicate the dataset).
 
     ``mode="append"``: only files carrying THIS call's ``file_prefix``
     are replaced; everything else is left in place. This is the
@@ -375,6 +382,8 @@ def write_partitioned_tfrecords(
     """
     import glob
     import shutil
+
+    from pyspark import TaskContext
 
     if mode not in ("overwrite", "append"):
         raise ValueError("mode must be 'overwrite' or 'append'")
@@ -395,8 +404,17 @@ def write_partitioned_tfrecords(
     os.makedirs(out_dir, exist_ok=True)
 
     def _write_partition(rows):
-        fid = uuid.uuid4().hex[:12]
+        ctx = TaskContext.get()
+        name = f"{file_prefix}-{ctx.partitionId():05d}.tfrecord.gz"
+        for p in glob.glob(os.path.join(
+            glob.escape(out_dir),
+            "Split-*" if split_col else "",
+            glob.escape(f".{name}.") + "*.tmp",
+        )):
+            os.remove(p)
+        tmp = f".{name}.{ctx.taskAttemptId()}.tmp"
         handles: dict[str, object] = {}
+        subs: list[str] = []
         with contextlib.ExitStack() as stack:
             for row in rows:
                 key = row[split_col] if split_col else ""
@@ -408,15 +426,17 @@ def write_partitioned_tfrecords(
                         else out_dir
                     )
                     os.makedirs(sub, exist_ok=True)
-                    raw = stack.enter_context(open(
-                        os.path.join(sub, f"{file_prefix}-{fid}.tfrecord.gz"),
-                        "wb",
-                    ))
+                    subs.append(sub)
+                    raw = stack.enter_context(
+                        open(os.path.join(sub, tmp), "wb")
+                    )
                     # No file name or time in the gzip header: a shard's
                     # bytes depend only on its records.
                     f = handles[key] = stack.enter_context(gzip.GzipFile(
                         filename="", mode="wb", fileobj=raw, mtime=0
                     ))
                 _write_record(f, row[bytes_col])
+        for sub in subs:
+            os.replace(os.path.join(sub, tmp), os.path.join(sub, name))
 
     bytes_df.foreachPartition(_write_partition)
